@@ -284,10 +284,6 @@ object GraftFunctions {
     ext.injectHintResolutionRule(s =>
       new graft.sources.InsertOnlyMergeCurrentState(s))
     ext.injectOptimizerRule(_ => graft.plans.BandJoinRewrite)
-    // native band-join path (flag-gated by spark.graft.bandjoin.native):
-    // logical conversion + dedicated physical operator
-    ext.injectOptimizerRule(_ => graft.plans.BandJoinConvert)
-    ext.injectPlannerStrategy(_ => graft.plans.BandJoinStrategy)
   }
 }
 

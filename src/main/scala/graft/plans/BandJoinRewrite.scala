@@ -65,9 +65,7 @@ object BandJoinRewrite extends Rule[org.apache.spark.sql.catalyst.plans.logical.
           // kill switch: with the rule wired session-wide through
           // spark.sql.extensions, baselines (and users who want
           // Spark's naive plan back) disable it per-session
-          conf.getConfString("spark.graft.bandjoin.enabled", "true") == "true" &&
-          // defer to the native BandJoinExec path when enabled
-          conf.getConfString("spark.graft.bandjoin.native", "false") != "true" =>
+          conf.getConfString("spark.graft.bandjoin.enabled", "true") == "true" =>
       BandJoinPattern.findBand(cond, left, right) match {
         case Some((x, y, w1, w2)) if w1 + w2 > 0 =>
           val w = w1 + w2
@@ -102,9 +100,8 @@ object BandJoinRewrite extends Rule[org.apache.spark.sql.catalyst.plans.logical.
       j.right.output.exists(_.name == BucketR)
 }
 
-/** Shared band-join recognition + exact bucketing arithmetic, used by
-  * both the rewrite rule above and the native
-  * [[BandJoinConvert]]/[[graft.exec.BandJoinExec]] path. */
+/** Band-join recognition + exact bucketing arithmetic for the rewrite
+  * rule above. */
 private[graft] object BandJoinPattern {
 
   /** Integral operands with whole widths bucket in exact LONG

@@ -2563,11 +2563,10 @@ object RelationalQueries {
             countDistinct(col("p_partkey")).as("n_parts"))
       }),
 
-    // The same range join through the NATIVE physical operator
-    // (BandJoinPlan → BandJoinStrategy → BandJoinExec): the query is
-    // written as the plain BETWEEN join and the engine plans the
-    // single-shuffle bucketed execution itself — no manual bucketing
-    // in user code. Same oracle as the rewrite path.
+    // The same range join written as the plain BETWEEN join, with no
+    // bucketing in user code: the session's BandJoinRewrite (wired
+    // through spark.sql.extensions) must catch it and plan the
+    // bucketed hash join itself. Same oracle as the hand-bucketed entry.
     QueryDef("q_range_join_native", Some(
       """SELECT p_brand AS brand, count(*) AS n_pairs,
         |  count(DISTINCT p_partkey) AS n_parts
@@ -2575,17 +2574,6 @@ object RelationalQueries {
         |  ON l_extendedprice BETWEEN p_retailprice - 5 AND p_retailprice + 5
         |GROUP BY p_brand""".stripMargin))(
       (s, d) => {
-        // idempotent session wiring (a GraftExtensions-built session
-        // already has both; plain sessions get them here)
-        if (!s.experimental.extraOptimizations.exists(_ eq graft.plans.BandJoinConvert)) {
-          s.experimental.extraOptimizations =
-            s.experimental.extraOptimizations :+ graft.plans.BandJoinConvert
-        }
-        if (!s.experimental.extraStrategies.exists(_ eq graft.plans.BandJoinStrategy)) {
-          s.experimental.extraStrategies =
-            s.experimental.extraStrategies :+ graft.plans.BandJoinStrategy
-        }
-        s.conf.set("spark.graft.bandjoin.native", "true")
         val p = Tables(s, d, "part")
         val li = Tables(s, d, "lineitem")
         p.join(li, li("l_extendedprice").between(

@@ -1246,7 +1246,7 @@ object StreamingQueries {
     * 8 partitions keeps the run parallel while cutting that fixed cost
     * 4× (the loopSized lesson, applied to streaming state). At
     * production scale the session setting is larger and this override
-    * would be too — the knob is the fixture-sized default, not a cap.
+    * would be too — `n` is the fixture-sized default, not a cap.
     * Same single-threaded-driver assumption as GraphQueries.loopSized:
     * the override is session-global while the stream runs. */
   private def withStatePartitions[T](s: org.apache.spark.sql.SparkSession,
@@ -1273,14 +1273,10 @@ object StreamingQueries {
     // (sessionize_tws [2.3,2.1,2.0] → [5.1,4.3,2.9] s, topk 1.88 →
     // 2.50 median). The knob's 100 TB rationale lives in CdcStream,
     // whose CDC entries keep it on as the operation under proof.
-    // fixture-sized default, conf-overridable (production sets its own
-    // parallelism; the A/B knob keeps the default honest per §1)
-    val target = s.conf.getOption("spark.graft.stream.statePartitions")
-      .map(_.toInt).getOrElse(n)
     val prev = s.conf.get("spark.sql.shuffle.partitions")
     val prevNd = s.conf.get(ndKey)
     val prevProv = s.conf.get(provKey)
-    s.conf.set("spark.sql.shuffle.partitions", target.toString)
+    s.conf.set("spark.sql.shuffle.partitions", n.toString)
     s.conf.set(ndKey, "true")
     try f finally {
       s.conf.set("spark.sql.shuffle.partitions", prev)

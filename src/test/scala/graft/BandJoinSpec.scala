@@ -1,6 +1,7 @@
 package graft
 
 import graft.plans.BandJoinRewrite
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** The band-join optimizer rule: a naive BETWEEN join plans as a
@@ -17,28 +18,95 @@ class BandJoinSpec extends SparkSpecBase {
       .agg(count(lit(1)).as("n_pairs"))
   }
 
-  test("without the rule: nested-loop; with it: hash join, same result") {
-    // the rule is wired session-wide through spark.sql.extensions;
-    // the naive baseline uses its kill switch
+  /** Plan and sorted rows of `q`, first with the rule off (its kill
+    * switch: Spark's naive plan), then with the session's rule. `q` is
+    * by-name so each run plans a fresh Dataset. */
+  private def naiveThenRewritten[T: Ordering](q: => DataFrame)(row: Row => T)
+      : ((String, Seq[T]), (String, Seq[T])) = {
+    def run() = {
+      val df = q
+      (df.queryExecution.executedPlan.toString, df.collect().toSeq.map(row).sorted)
+    }
     spark.conf.set("spark.graft.bandjoin.enabled", "false")
-    val (naivePlan, expected) = try {
-      (bandJoin.queryExecution.executedPlan.toString,
-        bandJoin.collect()
-          .map(r => (r.getString(0), r.getLong(1))).sortBy(_._1).toSeq)
-    } finally spark.conf.unset("spark.graft.bandjoin.enabled")
+    val naive = try run() finally spark.conf.unset("spark.graft.bandjoin.enabled")
+    (naive, run())
+  }
+
+  private def assertRewritten(plan: String): Unit = {
+    assert(!plan.contains("BroadcastNestedLoopJoin") &&
+      !plan.contains("CartesianProduct"), s"band join not rewritten:\n$plan")
+    assert(plan.contains("__graft_bucket_l"), s"rewrite marker missing:\n$plan")
+  }
+
+  test("without the rule: nested-loop; with it: hash join, same result") {
+    val ((naivePlan, expected), (optPlan, got)) =
+      naiveThenRewritten(bandJoin)(r => (r.getString(0), r.getLong(1)))
     assert(naivePlan.contains("BroadcastNestedLoopJoin") ||
       naivePlan.contains("CartesianProduct"),
       s"expected the naive plan to be a cross product:\n$naivePlan")
-
-    val optPlan = bandJoin.queryExecution.executedPlan.toString
-    assert(!optPlan.contains("BroadcastNestedLoopJoin") &&
-      !optPlan.contains("CartesianProduct"),
-      s"band join not rewritten:\n$optPlan")
-    assert(optPlan.contains("__graft_bucket"),
-      s"rewrite marker missing:\n$optPlan")
-    val got = bandJoin.collect()
-      .map(r => (r.getString(0), r.getLong(1))).sortBy(_._1).toSeq
+    assertRewritten(optPlan)
     assert(got === expected)
+  }
+
+  test("double band with asymmetric fractional widths matches the naive join") {
+    def asymmetricBand = {
+      val p = Tables(spark, sfDir, "part")
+      val li = Tables(spark, sfDir, "lineitem")
+      p.join(li, li("l_extendedprice") >= p("p_retailprice") - 2.5 &&
+          li("l_extendedprice") <= p("p_retailprice") + 7.25)
+        .groupBy(p("p_brand").as("brand"))
+        .agg(count(lit(1)).as("n_pairs"))
+    }
+    val ((_, expected), (plan, got)) =
+      naiveThenRewritten(asymmetricBand)(r => (r.getString(0), r.getLong(1)))
+    assertRewritten(plan)
+    // fractional widths take the DOUBLE floor path, not floorDiv
+    assert(!plan.contains("pmod("), s"double band bucketed as integral:\n$plan")
+    assert(got.nonEmpty && got === expected)
+  }
+
+  test("integral band (exact LONG bucketing) matches the naive join") {
+    def integralBand = {
+      val o = Tables(spark, sfDir, "orders")
+        .select(col("o_orderkey").as("ok"), col("o_custkey").as("ck"))
+      val c = Tables(spark, sfDir, "customer")
+        .select(col("c_custkey").as("cck"), col("c_nationkey").as("nk"))
+      o.join(c, o("ck") >= c("cck") - 2 && o("ck") <= c("cck") + 3)
+        .groupBy(col("nk")).agg(count(lit(1)).as("n"))
+    }
+    val ((_, expected), (plan, got)) =
+      naiveThenRewritten(integralBand)(r => (r.getInt(0), r.getLong(1)))
+    assertRewritten(plan)
+    // integral operands bucket by floorDiv = (e - pmod(e, w)) div w,
+    // not through a DOUBLE floor that rounds above 2^53
+    assert(plan.contains("pmod("), s"integral bucketing not used:\n$plan")
+    assert(got.nonEmpty && got === expected)
+  }
+
+  test("null band operands produce no pairs (inner semantics)") {
+    import spark.implicits._
+    def j = {
+      val l = Seq(Some(1.0), None, Some(10.0)).toDF("xv")
+      val r = Seq(Some(1.5), None, Some(20.0)).toDF("yv")
+      l.join(r, l("xv") >= r("yv") - 1 && l("xv") <= r("yv") + 1)
+    }
+    val ((_, expected), (plan, got)) = naiveThenRewritten(j)(_.toString)
+    assertRewritten(plan)
+    assert(got === expected)
+    assert(got === Seq("[1.0,1.5]"))
+  }
+
+  test("q_range_join_native is planned by the session rule and leaves the session as it found it") {
+    def graftConfs = spark.conf.getAll.filter(_._1.startsWith("spark.graft."))
+    val confsBefore = graftConfs
+    val optimizationsBefore = spark.experimental.extraOptimizations
+    val strategiesBefore = spark.experimental.extraStrategies
+    val plan = Catalog.byName("q_range_join_native").fn(spark, sfDir)
+      .queryExecution.executedPlan.toString
+    assertRewritten(plan)
+    assert(graftConfs === confsBefore)
+    assert(spark.experimental.extraOptimizations === optimizationsBefore)
+    assert(spark.experimental.extraStrategies === strategiesBefore)
   }
 
   test("swapped orientation (banded column on the right child) rewrites too") {

@@ -4,17 +4,19 @@ import org.apache.spark.TaskContext
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Forked-JVM chaos harness for the native band join: injects exactly
-  * one task failure in (a) the map stage feeding the band shuffle and
-  * (b) the reduce stage executing [[graft.exec.BandJoinExec]] itself,
-  * and checks the retried run still produces the exact plain-Spark
-  * join result. The fork exists because task retries need a
-  * `local[N,maxFailures]` master, and the shared spec session is
-  * `local[4]` (maxFailures=1, a failed task kills the job).
+/** Forked-JVM chaos harness for the band-join rewrite: injects exactly
+  * one task failure in (a) the map stage feeding the bucket shuffle and
+  * (b) the reduce stage executing the bucketed join itself, and checks
+  * the retried run still produces the exact plain-Spark join result.
+  * Broadcast joins are off so the bucketed join is a shuffled join and
+  * the two injections land in different stages. The fork exists
+  * because task retries need a `local[N,maxFailures]` master, and the
+  * shared spec session is `local[4]` (maxFailures=1, a failed task
+  * kills the job).
   *
   * Exit codes: 0 OK; 2 result mismatch; 3 injection never fired
-  * (the test would be vacuous); any other non-zero = job died (retry
-  * did not recover the task).
+  * (the test would be vacuous); 4 band join not rewritten; any other
+  * non-zero = job died (retry did not recover the task).
   */
 object ChaosBandMain {
   private val failedMap = new java.util.concurrent.atomic.AtomicBoolean(false)
@@ -32,6 +34,7 @@ object ChaosBandMain {
     val spark = SparkSession.builder()
       .master("local[4,3]") // task retries enabled
       .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
@@ -52,12 +55,9 @@ object ChaosBandMain {
     val expected = bandJoin(identity, identity)
 
     spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ graft.plans.BandJoinConvert
-    spark.experimental.extraStrategies =
-      spark.experimental.extraStrategies :+ graft.plans.BandJoinStrategy
-    spark.conf.set("spark.graft.bandjoin.native", "true")
+      spark.experimental.extraOptimizations :+ graft.plans.BandJoinRewrite
 
-    // the executed plan must actually be the custom operator
+    // the executed plan must actually be the bucketed rewrite
     val planCheck = {
       val p = Tables(spark, sfDir, "part")
       val li = Tables(spark, sfDir, "lineitem")
@@ -65,8 +65,10 @@ object ChaosBandMain {
           p("p_retailprice") - 5, p("p_retailprice") + 5))
         .queryExecution.executedPlan.toString
     }
-    if (!planCheck.contains("BandJoin")) {
-      System.err.println(s"native operator not planned:\n$planCheck")
+    if (planCheck.contains("BroadcastNestedLoopJoin") ||
+        planCheck.contains("CartesianProduct") ||
+        !planCheck.contains("__graft_bucket_l")) {
+      System.err.println(s"band join not rewritten:\n$planCheck")
       sys.exit(4)
     }
 
@@ -79,7 +81,7 @@ object ChaosBandMain {
     val gotMap = bandJoin(
       li => li.withColumn("l_linenumber", mapChaos(col("l_linenumber").cast("long"))),
       identity)
-    // (b) reduce-stage failure: tap above the join, same stage as the exec
+    // (b) reduce-stage failure: tap above the join, same stage as the join
     val gotReduce = bandJoin(
       identity,
       j => j.withColumn("l_linenumber", reduceChaos(col("l_linenumber").cast("long"))))

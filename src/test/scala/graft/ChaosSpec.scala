@@ -48,9 +48,10 @@ class ChaosSpec extends SparkSpecBase {
   test("band join survives an injected task failure in both stages (forked JVM)") {
     // local[4,3]: a task failure must be retried, not kill the job —
     // the shared spec session is local[4] (maxFailures=1), hence the
-    // fork. ChaosBandMain fails one map-stage task (shuffle write)
-    // and one reduce-stage task (BandJoinExec itself) and compares
-    // against the plain-Spark join result.
+    // fork. ChaosBandMain runs the join through BandJoinRewrite, fails
+    // one map-stage task (bucket shuffle write) and one reduce-stage
+    // task (the bucketed join itself) and compares against the
+    // plain-Spark join result.
     val java = s"${System.getProperty("java.home")}/bin/java"
     val cp = System.getProperty("java.class.path")
     val pb = new ProcessBuilder(java, "-cp", cp, "-Xmx2g",
