@@ -2,6 +2,7 @@ package graft.pipeline
 
 import graft.ops.Relational
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 import org.slf4j.LoggerFactory
 
 /** Per-file append sink — the offline stand-in for the reference's
@@ -131,9 +132,12 @@ object IdempotentParquetSink extends AppendSink {
   *    granularity is effectively per-file. Append-then-checkpoint is
   *    at-least-once by design (SURVEY.md §3.4).
   *
-  * Progress counts come from parquet footers (metadata-only), fixing
-  * the reference's duplicate full scans (SURVEY.md §4.3) while keeping
-  * identical log semantics.
+  * The control plane is metadata-only. One footer read per staged
+  * file supplies both its progress row count and the schema its
+  * staged copy is read back with (no schema-inference job), fixing the
+  * reference's duplicate full scans (SURVEY.md §4.3) while keeping
+  * identical log semantics; checkpoint state is read with one listing
+  * per load attempt.
   */
 final class Pipeline(
     spark: SparkSession,
@@ -333,41 +337,43 @@ final class Pipeline(
       // re-run, where extract is skipped but the join re-executes)
       // reads co-located buckets and plans with no Exchange — the
       // shuffle is paid once at staging time, not per run.
+      def extract(s: SourceSpec)(stage: DataFrame => Unit): Unit = {
+        val df = Relational.filterSql(source(s), s.filter.orNull)
+        val (odf, harvest) = observed(df, s"${t.targetTable}/extract_${s.name}")
+        stage(odf)
+        harvest()
+      }
       val staged = t.sources.map { s =>
         val reread = s.bucketKey match {
           case Some(key) =>
             val tbl = bucketTableName(s.name)
-            if (!spark.catalog.tableExists(tbl)) {
-              binfo(s"[${t.targetTable}] extracting ${s.name} (bucketed by $key)")
-              val df = Relational.filterSql(source(s), s.filter.orNull)
-              val (odf, harvest) = observed(df, s"${t.targetTable}/extract_${s.name}")
-              Relational.sinkBucketed(odf, tbl, key, s.numBuckets, Some(key))
-              harvest()
-            } else if (!bucketTableHealthy(tbl)) {
-              // a job that died between catalog commit and data write
-              // (or whose storage was lost) leaves a table entry whose
-              // files don't read back — rebuild rather than hand the
-              // join a corrupt side
-              bwarn(s"[${t.targetTable}] bucketed raw ${s.name} unreadable — rebuilding")
-              spark.sql(s"DROP TABLE IF EXISTS $tbl")
-              val df = Relational.filterSql(source(s), s.filter.orNull)
-              Relational.sinkBucketed(df, tbl, key, s.numBuckets, Some(key))
-            } else {
+            val exists = spark.catalog.tableExists(tbl)
+            if (exists && bucketTableHealthy(tbl)) {
               binfo(s"[${t.targetTable}] bucketed raw ${s.name} already staged — skipping extract")
+            } else {
+              if (exists) {
+                // a job that died between catalog commit and data write
+                // (or whose storage was lost) leaves a table entry whose
+                // files don't read back — rebuild rather than hand the
+                // join a corrupt side
+                bwarn(s"[${t.targetTable}] bucketed raw ${s.name} unreadable — rebuilding")
+                spark.sql(s"DROP TABLE IF EXISTS $tbl")
+              } else binfo(s"[${t.targetTable}] extracting ${s.name} (bucketed by $key)")
+              extract(s)(Relational.sinkBucketed(_, tbl, key, s.numBuckets, Some(key)))
             }
             spark.table(tbl)
           case None =>
             val rawDir = spec.rawDir(s.name)
             if (!storage.datasetExists(rawDir)) {
               binfo(s"[${t.targetTable}] extracting ${s.name}")
-              val df = Relational.filterSql(source(s), s.filter.orNull)
-              val (odf, harvest) = observed(df, s"${t.targetTable}/extract_${s.name}")
-              Relational.sinkParquet(Relational.rebalance(odf, s.numPartitions), rawDir)
-              harvest()
+              extract(s)(odf =>
+                Relational.sinkParquet(Relational.rebalance(odf, s.numPartitions), rawDir))
             } else {
               binfo(s"[${t.targetTable}] raw ${s.name} already staged — skipping extract")
             }
-            Relational.scanParquet(spark, rawDir)
+            // one write job staged every file, so the first footer's
+            // schema is the dataset's
+            readStaged(rawDir, storage.listParquet(rawDir).headOption.flatMap(storage.footer(_)._2))
         }
         // py:398 — always re-read from storage, never pass through
         // memory; alias by source name (py:135-138) so join conditions
@@ -396,20 +402,29 @@ final class Pipeline(
     binfo(f"Migration for table ${t.targetTable} completed successfully in ${(System.nanoTime() - t0) / 1e9}%.2f seconds.")
   }
 
+  /** A staged parquet file or dataset, read with the schema its writer
+    * stored in the footer: no schema-inference job. */
+  private def readStaged(path: String, schema: Option[StructType]): DataFrame =
+    schema.fold(Relational.scanParquet(spark, path))(spark.read.schema(_).parquet(path))
+
+  private def fileName(file: String): String = file.substring(file.lastIndexOf('/') + 1)
+
+  /** One attempt: one listing of the staged files, one footer read per
+    * file (progress rows + read schema), one checkpoint listing. */
   private def loadCheckpointed(t: TableSpec, binfo: String => Unit): Unit = {
-    val transformedDir = spec.transformedDir(t.targetTable)
     val checkpointDir = spec.checkpointDir(t.targetTable)
     val targetDir = spec.targetDir(t.targetTable)
-    val files = storage.listParquet(transformedDir)
-    val total = files.map(storage.footerRowCount).sum // metadata-only
+    val footers = storage.listParquet(spec.transformedDir(t.targetTable))
+      .map(f => f -> storage.footer(f))
+    val loaded = storage.checkpointed(checkpointDir)
+    val total = footers.map(_._2._1).sum
     var processed = 0L
-    files.foreach { file =>
-      val name = file.substring(file.lastIndexOf('/') + 1)
-      val rows = storage.footerRowCount(file)
-      if (storage.checkpointExists(checkpointDir, name)) {
+    footers.foreach { case (file, (rows, schema)) =>
+      val name = fileName(file)
+      if (loaded(name)) {
         binfo(s"[${t.targetTable}] $name already loaded — skipping")
       } else {
-        sink.append(Relational.scanParquet(spark, file), targetDir, name)
+        sink.append(readStaged(file, schema), targetDir, name)
         storage.createCheckpoint(checkpointDir, name)
       }
       processed += rows
@@ -435,11 +450,8 @@ final class Pipeline(
     val checkpointDir = spec.checkpointDir(targetTable)
     if (!storage.datasetExists(spec.targetDir(targetTable))) return false
     val files = storage.listParquet(transformedDir)
-    val committed = files.nonEmpty && files.forall { f =>
-      storage.checkpointExists(checkpointDir,
-        f.substring(f.lastIndexOf('/') + 1))
-    }
-    if (!committed) return false
+    val loaded = storage.checkpointed(checkpointDir)
+    if (files.isEmpty || !files.forall(f => loaded(fileName(f)))) return false
     val srcs = spec.tables.filter(_.targetTable == targetTable)
       .flatMap(_.sources).distinctBy(_.name)
     srcs.foreach { s =>

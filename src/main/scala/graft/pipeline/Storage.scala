@@ -2,18 +2,24 @@ package graft.pipeline
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
+import org.apache.spark.sql.types.{DataType, StructType}
+import scala.jdk.CollectionConverters._
 
 /** Storage control plane over the Hadoop FileSystem API — one code path
   * for s3a:// and file:// alike (replaces the reference's boto3
   * side-channel, SURVEY.md §4.3):
   *  - dataset existence probes (ref py:156-184)
-  *  - per-file checkpoint markers (ref py:237-276)
+  *  - per-file checkpoint markers (ref py:237-276), read back as one
+  *    listing per resume decision
   *  - staged-file enumeration (ref py:279-300)
-  *  - parquet footer row counts — progress accounting WITHOUT
-  *    re-scanning data (the reference re-reads and count()s every file,
-  *    py:317-325; footers make that a metadata-only operation).
+  *  - parquet footers — row count AND the writer's Spark schema from
+  *    one metadata read: progress accounting without re-scanning data
+  *    (the reference re-reads and count()s every file, py:317-325) and
+  *    staged reads without a schema-inference job.
   */
 final class Storage(conf: Configuration) {
 
@@ -46,7 +52,20 @@ final class Storage(conf: Configuration) {
     f.create(m, true).close()
   }
 
-  /** C4 — has this file already been loaded? */
+  /** C4 — names of the already-loaded files under `checkpointDir`, from
+    * ONE listing (a missing directory means nothing is loaded yet).
+    * Checksum sidecars and anything else that is not a marker are
+    * ignored. */
+  def checkpointed(checkpointDir: String): Set[String] = {
+    val p = new Path(checkpointDir)
+    try fs(p).listStatus(p).iterator
+      .collect { case st if st.isFile && st.getPath.getName.endsWith(".checkpoint") =>
+        st.getPath.getName.stripSuffix(".checkpoint") }
+      .toSet
+    catch { case _: java.io.FileNotFoundException => Set.empty }
+  }
+
+  /** C4 — has this one file already been loaded? */
   def checkpointExists(checkpointDir: String, fileName: String): Boolean = {
     val m = checkpointMarker(checkpointDir, fileName)
     fs(m).exists(m)
@@ -58,11 +77,23 @@ final class Storage(conf: Configuration) {
     if (f.exists(p)) { f.delete(p, true); () }
   }
 
-  /** Row count from the parquet footer — no data read. */
-  def footerRowCount(file: String): Long = {
-    val in = HadoopInputFile.fromPath(new Path(file), conf)
-    val r = ParquetFileReader.open(in)
-    try r.getRecordCount finally r.close()
+  /** One footer read, no data read: the file's row count (summed over
+    * its row groups) and the Spark schema its writer stored under
+    * [[ParquetReadSupport.SPARK_METADATA_KEY]] (None for a file not
+    * written by Spark). Read options come from `conf`: the one-argument
+    * `ParquetFileReader.open(file)` builds them over a fresh default
+    * Hadoop `Configuration` on every call, which cost more than the
+    * footer read itself. */
+  def footer(file: String): (Long, Option[StructType]) = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file), conf),
+      HadoopReadOptions.builder(conf).build())
+    try {
+      val meta = r.getFooter
+      (meta.getBlocks.asScala.map(_.getRowCount).sum,
+        Option(meta.getFileMetaData.getKeyValueMetaData
+          .get(ParquetReadSupport.SPARK_METADATA_KEY))
+          .map(DataType.fromJson(_).asInstanceOf[StructType]))
+    } finally r.close()
   }
 }
 

@@ -199,7 +199,9 @@ object KeyedTableOps {
     * committed schema when one exists. With the key in the properties,
     * the table stays resolvable even when manifests alone could not
     * prove a contract (zero commits after a crash-before-load, or a
-    * deliberate re-parallelization mixing live moduli). */
+    * deliberate re-parallelization mixing live moduli). A re-declare
+    * the stored properties already hold writes nothing and takes no
+    * lock — every pipeline re-launch makes one. */
   def declareTable(path: String, key: String, writePartitions: Int,
       clustering: Seq[String] = Seq.empty): Unit = {
     require(key.nonEmpty && writePartitions > 0)
@@ -210,11 +212,12 @@ object KeyedTableOps {
       (key +: clustering).foreach(c => require(sch.fieldNames.contains(c),
         s"primary-key column '$c' is not a column of $sch"))
     }
-    KeyedTable.updateProps(path, conf)(
-      _ ++ Map("key" -> key, "writePartitions" -> writePartitions.toString) ++
-        (if (clustering.nonEmpty)
-          Map("clustering" -> clustering.mkString(","))
-         else Map.empty))
+    val entries = Map("key" -> key, "writePartitions" -> writePartitions.toString) ++
+      (if (clustering.nonEmpty) Map("clustering" -> clustering.mkString(","))
+       else Map.empty)
+    val stored = KeyedTable.readProps(path, conf)
+    if (!entries.forall { case (k, v) => stored.get(k).contains(v) })
+      KeyedTable.updateProps(path, conf)(_ ++ entries)
   }
 
   /** Last-write-wins resolution over a KeyedTable frame: one row per

@@ -150,6 +150,39 @@ class KeyedTableSpec extends SparkSpecBase {
     assert(readBack(t).count() === 1000L)
   }
 
+  test("re-declaring an unchanged contract writes nothing; a changed one merges under the lock") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val t = newTarget()
+    Seq((1L, 2L, 3L)).toDF("k", "ck", "v").write.format("graft.sources.KeyedTable")
+      .option("key", "k").mode("append").save(t)
+    graft.sources.KeyedTableOps.declareTable(t, "k", 4, clustering = Seq("ck"))
+    val props = new java.io.File(t, "_props").toPath
+    val before = java.nio.file.Files.readAllLines(props)
+    // backdate: any rewrite would stamp a fresh mtime
+    val mtime = java.nio.file.attribute.FileTime.fromMillis(
+      System.currentTimeMillis() - 60000)
+    java.nio.file.Files.setLastModifiedTime(props, mtime)
+    // another maintainer holds the lock: an unchanged re-declare (full,
+    // or a subset of the stored entries) must not wait for it
+    val lock = new java.io.File(t, "_commits/.maint.lock").toPath
+    java.nio.file.Files.write(lock, "other-maintainer".getBytes("UTF-8"))
+    val changed = try {
+      graft.sources.KeyedTableOps.declareTable(t, "k", 4, clustering = Seq("ck"))
+      graft.sources.KeyedTableOps.declareTable(t, "k", 4)
+      assert(java.nio.file.Files.getLastModifiedTime(props) === mtime)
+      assert(java.nio.file.Files.readAllLines(props) === before)
+      val f = Future(graft.sources.KeyedTableOps.declareTable(t, "k", 8))
+      Thread.sleep(500)
+      assert(!f.isCompleted, "a changed contract must wait for the maintenance lock")
+      f
+    } finally java.nio.file.Files.delete(lock)
+    Await.result(changed, scala.concurrent.duration.Duration(30, "s"))
+    assert(java.nio.file.Files.readAllLines(props).toArray.toSet ===
+      Set("key=k", "writePartitions=8", "clustering=ck"))
+    assert(readBack(t).count() === 1L)
+  }
+
   test("two streams appending to one table never collide on epoch numbers") {
     import org.apache.spark.sql.streaming.Trigger
     // the epoch-manifest scoping contract: manifests are named by

@@ -184,8 +184,65 @@ class PipelineSpec extends SparkSpecBase {
     val sp = run(freshWorkspace())
     val storage = new Storage(spark.sparkContext.hadoopConfiguration)
     val files = storage.listParquet(sp.transformedDir("enriched_lineitem"))
-    val footerTotal = files.map(storage.footerRowCount).sum
-    assert(footerTotal === expectedRows)
+    files.foreach(f => assert(storage.footer(f)._1 === spark.read.parquet(f).count(), f))
+    assert(files.map(storage.footer(_)._1).sum === expectedRows)
+  }
+
+  test("footer schema equals the inferred schema of every staged file") {
+    val sp = run(freshWorkspace())
+    val storage = new Storage(spark.sparkContext.hadoopConfiguration)
+    val dirs = sp.transformedDir("enriched_lineitem") +:
+      sp.tables.head.sources.map(s => sp.rawDir(s.name))
+    val files = dirs.flatMap(storage.listParquet)
+    assert(files.size > dirs.size)
+    files.foreach(f => assert(storage.footer(f)._2 === Some(spark.read.parquet(f).schema), f))
+  }
+
+  test("checkpointed: one listing of marker names; missing dir is empty") {
+    val storage = new Storage(spark.sparkContext.hadoopConfiguration)
+    val dir = s"${freshWorkspace()}/checkpoints"
+    assert(storage.checkpointed(dir) === Set.empty)
+    storage.createCheckpoint(dir, "part-0.parquet")
+    storage.createCheckpoint(dir, "part-1.parquet")
+    Files.write(java.nio.file.Paths.get(dir, "stray.txt"), Array[Byte](1))
+    new java.io.File(dir, "nested.checkpoint").mkdir()
+    // the local FS writes a checksum sidecar beside every marker
+    assert(new java.io.File(dir, ".part-0.parquet.checkpoint.crc").exists())
+    assert(storage.checkpointed(dir) === Set("part-0.parquet", "part-1.parquet"))
+    assert(storage.checkpointExists(dir, "part-0.parquet"))
+  }
+
+  /** Spark jobs `body` runs on this thread, counted by job group. The
+    * status store is fed asynchronously, so a marker job is run after
+    * `body` and awaited: once it shows, every earlier job has too. */
+  private def jobsRun(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    def inGroup(g: String)(f: => Unit): Unit = {
+      sc.setJobGroup(g, g)
+      try f finally sc.clearJobGroup()
+    }
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    inGroup(group)(body)
+    inGroup(s"$group-marker")(sc.parallelize(Seq(1), 1).count())
+    val deadline = System.currentTimeMillis() + 30000
+    while (sc.statusTracker.getJobIdsForGroup(s"$group-marker").isEmpty &&
+      System.currentTimeMillis() < deadline) Thread.sleep(10)
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
+
+  test("resume load runs one Spark job per staged file; a no-op re-launch runs none") {
+    val ws = freshWorkspace()
+    val sp = run(ws)
+    val storage = new Storage(spark.sparkContext.hadoopConfiguration)
+    val files = storage.listParquet(sp.transformedDir("enriched_lineitem"))
+    assert(files.size >= 2)
+    storage.delete(sp.targetDir("enriched_lineitem"))
+    storage.delete(sp.checkpointDir("enriched_lineitem"))
+    // every staged file is pending: its append is its only job (no
+    // schema-inference job ahead of it)
+    assert(jobsRun(run(ws)) === files.size)
+    assert(spark.read.parquet(sp.targetDir("enriched_lineitem")).count() === expectedRows)
+    assert(jobsRun(run(ws)) === 0)
   }
 
   test("re-run is a no-op: no duplicate loads (checkpoint skip)") {
@@ -207,7 +264,7 @@ class PipelineSpec extends SparkSpecBase {
     // rows of one file and its checkpoint marker
     val victim = files.head
     val victimName = victim.substring(victim.lastIndexOf('/') + 1)
-    val victimRows = storage.footerRowCount(victim)
+    val victimRows = storage.footer(victim)._1
     storage.delete(sp.targetDir("enriched_lineitem"))
     storage.delete(storage.checkpointMarker(
       sp.checkpointDir("enriched_lineitem"), victimName).toString)
@@ -442,9 +499,13 @@ class PipelineSpec extends SparkSpecBase {
       case s if s.name == "nation" => s.copy(bucketKey = Some("n_nationkey"))
       case s => s
     })))
-    def runIt() = new Pipeline(spark, bucketed,
-      src => Relational.scanParquet(spark, s"$sfDir/${src.name}.parquet"),
-      retryInitialDelayMs = 1).runAll()
+    def runIt(): Pipeline = {
+      val p = new Pipeline(spark, bucketed,
+        src => Relational.scanParquet(spark, s"$sfDir/${src.name}.parquet"),
+        retryInitialDelayMs = 1)
+      p.runAll()
+      p
+    }
     runIt()
     assert(spark.read.parquet(bucketed.targetDir("enriched_lineitem"))
       .count() === expectedRows)
@@ -465,8 +526,10 @@ class PipelineSpec extends SparkSpecBase {
     assert(new scala.reflect.io.Directory(
       new java.io.File(ws)).deleteRecursively())
 
-    runIt() // must detect the unreadable table and rebuild it
+    val rebuilt = runIt() // must detect the unreadable table and rebuild it
     assert(spark.table(tbl).count() > 0)
+    assert(rebuilt.stageCounts.get("enriched_lineitem/extract_nation") ===
+      Some(spark.table(tbl).count()))
     assert(spark.read.parquet(bucketed.targetDir("enriched_lineitem"))
       .count() === expectedRows)
   }
