@@ -1444,8 +1444,11 @@ object KeyedTable {
         hadoopConf())
     }
 
-    private def resolvedKey: String =
-      keyCol.getOrElse(dataSchema.fieldNames.head)
+    /** The `key` option, else the catalog loader's declared-or-proven
+      * key, else (last resort) the first column. */
+    private lazy val resolvedKey: String = keyCol
+      .orElse(KeyedTableOps.tableKey(path))
+      .getOrElse(dataSchema.fieldNames.head)
 
     private def deleteKeyLiterals(filters: Array[Filter]): Option[Seq[Any]] = {
       import org.apache.spark.sql.sources._
@@ -3223,6 +3226,21 @@ object KeyedTable {
   private[sources] def normZero(d: Double): Double =
     if (d == 0.0d) 0.0d else d
 
+  /** A key as SQL grouping emits it (Spark's NormalizeFloatingNumbers):
+    * -0.0 is 0.0 and every NaN the canonical NaN. Tables hold no FLOAT
+    * columns (`validateSchema`), so DOUBLE is the only floating key. */
+  private[sources] def normFloating(v: Any): Any = v match {
+    case d: Double => if (d.isNaN) Double.NaN else normZero(d)
+    case other => other
+  }
+
+  /** A key's SQL-grouping identity as a map key: the bits of the
+    * normalized double (a boxed NaN never equals itself under `==`). */
+  private[sources] def groupingKey(v: Any): Any = normFloating(v) match {
+    case d: Double => java.lang.Double.doubleToLongBits(d)
+    case other => other
+  }
+
   private[sources] def bucketOf(v: Any, dt: DataType, buckets: Int): Int = {
     val nv = v match {
       case d: java.lang.Double => java.lang.Double.valueOf(normZero(d))
@@ -3950,26 +3968,25 @@ object KeyedTable {
         case _ => splits
       }
 
-    /** Clustered-read grouping: one partition per write bucket, valid
-      * only when every planned file PROVED a bucket under one shared
-      * (key, modulus). Gated on the session's v2-bucketing switch —
-      * when Spark would ignore the report, per-file partitions keep
-      * the higher read parallelism instead. */
-    /** The ONE uniform-write-contract predicate — shared by the KGP
-      * report (grouping) and the resolve-scan's bucket-complete
-      * partitioning, so the two can never disagree on what "proven
-      * clustered" means: every planned file proved a bucket under one
-      * (key, modulus). */
+    /** The ONE uniform-write-contract predicate, shared by the KGP
+      * report (grouping) and the resolve-scan's partitioning: every
+      * planned file proved a bucket under one (key, modulus). A
+      * resolving scan folds `resolve.head`'s versions, so its contract
+      * must bucket on that column (another column's buckets split them). */
     private lazy val uniformContract: Option[(String, Int)] = {
       val keys = staticPlanned.map(_.entry.key).distinct
       val moduli = staticPlanned.map(_.entry.buckets).distinct
       if (staticPlanned.nonEmpty && keys.size == 1 && keys.head.nonEmpty &&
+          resolve.forall(_.head == keys.head) &&
           moduli.size == 1 && moduli.head > 0 &&
           staticPlanned.forall(_.entry.bucket >= 0))
         Some((keys.head, moduli.head))
       else None
     }
 
+    /** Clustered-read grouping: one partition per write bucket. Gated on
+      * the v2-bucketing switch — when Spark would ignore the report,
+      * per-file partitions keep the higher read parallelism. */
     private lazy val grouping: Option[(String, Int, Seq[(Int, Seq[KSplit])])] =
       if (!clusteredRead ||
           !org.apache.spark.sql.internal.SQLConf.get.v2BucketingEnabled) None
@@ -4323,11 +4340,7 @@ object KeyedTable {
       val pkIdx = dataSchema.fieldIndex(pk)
       val pkType = dataSchema.fields(pkIdx).dataType
       def keyOf(r: InternalRow): Any =
-        if (r.isNullAt(pkIdx)) null
-        else pkType match {
-          case DoubleType => normZero(r.getDouble(pkIdx))
-          case _ => r.get(pkIdx, pkType)
-        }
+        if (r.isNullAt(pkIdx)) null else groupingKey(r.get(pkIdx, pkType))
       def later(s: Long, p0: Long, s1: Long, p1: Long): Boolean =
         s > s1 || (s == s1 && p0 > p1)
       def inner(splits: Seq[KSplit]): PartitionReader[InternalRow] =
@@ -4658,7 +4671,8 @@ object KeyedTable {
     }
   }
 
-  /** MERGE-ON-READ for row-level operation scans: resolves the
+  /** MERGE-ON-READ for `view=current` scans ([[KeyedTableOps.latest]],
+    * row-level operations): resolves the
     * table's CURRENT state inside the reader, per write bucket —
     * the same read-side model Iceberg applies equality deletes with.
     * Each partition holds EVERY file of one bucket (the scan plans
@@ -4675,8 +4689,8 @@ object KeyedTable {
     *
     * MEMORY: the winner map holds one row per LIVE key of the bucket
     * — the bucket's compacted size, not its log size. That is the
-    * same state a hash aggregate would hold for the declarative
-    * latest view, un-spillable here; size write buckets so a bucket's
+    * same state [[KeyedTableOps.latestOver]]'s hash aggregate would
+    * hold, un-spillable here; size write buckets so a bucket's
     * live keys fit an executor (the write contract already scales
     * `writePartitions` with the table). Inner-reader rows are safe to
     * retain: the decode allocates fresh values per row and
@@ -4707,15 +4721,11 @@ object KeyedTable {
       val posIdx = extended.fieldNames.indexOf(MetaPos)
       val tombIdx = extended.fieldNames.indexOf(MetaTombstone)
       val width = required.length
-      // map-key values: SQL equality, not IEEE (-0.0 folds to 0.0 so
-      // both zeros resolve as one key, matching what a shuffle's
-      // NormalizeFloatingNumbers would have done declaratively)
+      // keys compare and emit as the declarative view's aggregate
+      // groups them: the two zeros and every NaN are one key each
+      val keyOut = required.fieldNames.map(keys.contains)
       def keyVal(r: InternalRow, i: Int, dt: DataType): Any =
-        if (r.isNullAt(i)) null
-        else dt match {
-          case DoubleType => normZero(r.getDouble(i))
-          case _ => r.get(i, dt)
-        }
+        if (r.isNullAt(i)) null else groupingKey(r.get(i, dt))
 
       new PartitionReader[InternalRow] {
         private var it: Iterator[InternalRow] = _
@@ -4765,7 +4775,11 @@ object KeyedTable {
               // scan at readSchema() width
               val out = new Array[Any](width)
               var i = 0
-              while (i < width) { out(i) = row.get(i, required(i).dataType); i += 1 }
+              while (i < width) {
+                val v = row.get(i, required(i).dataType)
+                out(i) = if (keyOut(i)) normFloating(v) else v
+                i += 1
+              }
               new org.apache.spark.sql.catalyst.expressions
                 .GenericInternalRow(out)
           }

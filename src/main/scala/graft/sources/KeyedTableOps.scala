@@ -14,12 +14,12 @@ import org.apache.spark.sql.functions._
   *  - **Upsert = append + last-write-wins read.** Writes stay pure
   *    appends (the fastest thing a distributed sink can do — no
   *    read-modify-write, no locks); [[latest]] resolves the current
-  *    row per key DECLARATIVELY: `max_by(payload, (_seq, _pos))` over
-  *    the log, where `(_seq, _pos)` is the table's deterministic
+  *    row per key inside the reader, one bucket per read partition,
+  *    keeping the highest `(_seq, _pos)` — the table's deterministic
   *    writetime (commit sequence, position in commit — metadata
-  *    columns, no bytes added to rows). Loaded through
-  *    [[KeyedTableCatalog]] the aggregate rides the write's bucket
-  *    clustering: the latest view of a 100 TB table plans NO Exchange.
+  *    columns, no bytes added to rows). It plans NO Exchange on the
+  *    path route and the catalog route alike. [[latestOver]] is the
+  *    same rule as a declarative `max_by` aggregate.
   *  - **DELETE = tombstone commit** ([[KeyedTable.KTable]]'s
   *    `SupportsDelete`): key-predicate-only, O(#keys) bytes written,
   *    nothing scanned; resolved by the same last-write-wins order, so
@@ -55,10 +55,10 @@ object KeyedTableOps {
     * (`clustering` in `_props` / CREATE TABLE TBLPROPERTIES /
     * [[declareClustering]]) because the storage layer cannot infer
     * them: it clusters, routes, and deletes on the partition key
-    * alone. EVERY key-resolving consumer (latest, rewriteCompact)
-    * reads the full key through here — resolving on the partition key
-    * alone would fold a composite table down to one row per partition
-    * and destroy its clustering rows. */
+    * alone. EVERY key-resolving consumer (rewriteCompact here, the
+    * reader behind latest) reads this declaration — resolving on the
+    * partition key alone would fold a composite table down to one row
+    * per partition and destroy its clustering rows. */
   def tableKeys(path: String): Option[Seq[String]] =
     tableKey(path).map { pk =>
       val conf = KeyedTable.hadoopConf()
@@ -225,7 +225,9 @@ object KeyedTableOps {
     * dropped. `df` must be a scan of the table (the metadata columns
     * resolve against it); output columns are exactly the table's data
     * columns. The aggregate is partial+final hash aggregation — over a
-    * catalog-loaded (bucket-clustered) scan it plans NO Exchange. */
+    * catalog-loaded (bucket-clustered) scan it plans NO Exchange. The
+    * whole-table folds ([[rewriteCompact]], [[rollback]]) resolve
+    * here: unlike the reader-resolved [[latest]], it can spill. */
   def latestOver(df: DataFrame, key: String): DataFrame =
     latestOver(df, Seq(key))
 
@@ -245,10 +247,7 @@ object KeyedTableOps {
     val dataCols = df.columns.toSeq
     require(keys.nonEmpty && keys.forall(dataCols.contains),
       s"key columns ${keys.mkString(",")} not among ${dataCols.mkString(",")}")
-    val withMeta = df.select(dataCols.map(col) ++ Seq(
-      col(KeyedTable.MetaSeq), col(KeyedTable.MetaPos),
-      col(KeyedTable.MetaTombstone)): _*)
-    val ver = struct(col(KeyedTable.MetaSeq), col(KeyedTable.MetaPos))
+    val withMeta = versioned(df, dataCols)
     if (keys.size == 1) {
       // single-key: the tombstone competes in the same max_by — one
       // aggregate, no second pass
@@ -257,20 +256,52 @@ object KeyedTableOps {
         col(KeyedTable.MetaTombstone).as("__tomb") +: rest.map(col): _*)
       withMeta
         .groupBy(col(keys.head))
-        .agg(max_by(payload, ver).as("__w"))
+        .agg(max_by(payload, version).as("__w"))
         .where(!col("__w.__tomb"))
         .select(dataCols.map(c =>
           if (keys.contains(c)) col(c) else col(s"__w.`$c`").as(c)): _*)
     } else {
       // self-contained spelling: cuts derived from the same frame (a
-      // second pass over it). latest(spark, path) builds the cuts from
-      // a tombstones-only scan instead — plan-time-pruned to the tiny
+      // second pass over it). rewriteCompact builds the cuts from a
+      // tombstones-only scan instead — plan-time-pruned to the tiny
       // marker files, no second pass over the data
-      val cuts = withMeta.where(col(KeyedTable.MetaTombstone))
-        .groupBy(col(keys.head)).agg(max(ver).as("__cut"))
-      compositeResolve(withMeta, keys, Some(cuts), dataCols)
+      compositeResolve(withMeta, keys, Some(cutsOf(withMeta, keys.head)), dataCols)
     }
   }
+
+  /** The version last-write-wins orders by: (commit sequence, position). */
+  private def version: Column =
+    struct(col(KeyedTable.MetaSeq), col(KeyedTable.MetaPos))
+
+  /** `cols` of a table scan plus its version and tombstone columns. */
+  private def versioned(df: DataFrame, cols: Seq[String]): DataFrame =
+    df.select(cols.map(col) ++ Seq(col(KeyedTable.MetaSeq),
+      col(KeyedTable.MetaPos), col(KeyedTable.MetaTombstone)): _*)
+
+  /** Per partition key, the highest tombstone version of a
+    * [[versioned]] frame (a second pass over it). */
+  private def cutsOf(withMeta: DataFrame, pk: String): DataFrame =
+    withMeta.where(col(KeyedTable.MetaTombstone))
+      .groupBy(col(pk)).agg(max(version).as("__cut"))
+
+  /** The data rows of a [[versioned]] frame that outrank their
+    * partition's tombstone cut (range-tombstone semantics); no cuts =
+    * no deletes in the snapshot, nothing to cut. */
+  private def survivors(withMeta: DataFrame, pk: String,
+      cuts: Option[DataFrame]): DataFrame = {
+    val data = withMeta.where(!col(KeyedTable.MetaTombstone))
+    cuts.fold(data)(c => data.join(broadcast(c), Seq(pk), "left")
+      .where(col("__cut").isNull || version > col("__cut")))
+  }
+
+  /** A counter table's fold: one increment per full key carrying the
+    * SUM of each counter column over the surviving increments. */
+  private def counterSums(live: DataFrame, keys: Seq[String],
+      counterCols: Seq[String], dataCols: Seq[String]): DataFrame =
+    live.groupBy(keys.map(col): _*)
+      .agg(sum(col(counterCols.head)).as(counterCols.head),
+        counterCols.tail.map(c => sum(col(c)).as(c)): _*)
+      .select(dataCols.map(col): _*)
 
   /** The composite resolution given an explicit tombstone-cut frame:
     * per partition key, the highest tombstone version; data rows at or
@@ -278,19 +309,12 @@ object KeyedTableOps {
     * semantics), survivors resolve last-write-wins per full key. */
   private def compositeResolve(withMeta: DataFrame, keys: Seq[String],
       cuts: Option[DataFrame], dataCols: Seq[String]): DataFrame = {
-    val ver = struct(col(KeyedTable.MetaSeq), col(KeyedTable.MetaPos))
-    val survivors = withMeta.where(!col(KeyedTable.MetaTombstone))
-    val live = cuts match {
-      case Some(c) => survivors
-        .join(broadcast(c), Seq(keys.head), "left")
-        .where(col("__cut").isNull || ver > col("__cut"))
-      case None => survivors
-    }
+    val live = survivors(withMeta, keys.head, cuts)
     val rest = dataCols.filterNot(keys.contains)
     if (rest.isEmpty) // every column is a key: survival IS the row
       live.select(dataCols.map(col): _*).distinct()
     else live.groupBy(keys.map(col): _*)
-      .agg(max_by(struct(rest.map(col): _*), ver).as("__w"))
+      .agg(max_by(struct(rest.map(col): _*), version).as("__w"))
       .select(dataCols.map(c =>
         if (keys.contains(c)) col(c) else col(s"__w.`$c`").as(c)): _*)
   }
@@ -313,33 +337,27 @@ object KeyedTableOps {
   /** The table's CURRENT STATE — what `SELECT * FROM t` means in
     * Cassandra, resolved on the table's FULL declared primary key
     * (partition key + clustering columns). SNAPSHOT-CONSISTENT: the
-    * view pins the live manifest NAME SET at construction and threads
-    * it into every scan it builds, so the tombstone decision, the cut
-    * scan, and the data scan all plan one immutable manifest set —
-    * commits racing the read can never tear it, even one publishing
-    * at a reserved sequence at or below the pin's max (which a
-    * seq-only pin would tear on). Re-construct to see new commits.
-    * Composite tables get their tombstone cuts from a tombstones-only
-    * scan — plan-time-pruned to the marker files, never a second pass
-    * over the data — and skip the cut join entirely when the pinned
-    * snapshot holds no deletes. */
+    * view pins the live manifest NAME SET at construction, so commits
+    * racing the read can never tear it. Re-construct to see new
+    * commits.
+    *
+    * One scan, the table's `view=current` read: each read partition
+    * holds every file of one write bucket and resolves last-write-wins
+    * and tombstones as it reads, like a Cassandra node merging a
+    * partition's versions. A point read `latest(...).where(k === v)`
+    * is one Spark job with no Exchange, on the path route as on the
+    * catalog route. The trade-off: a task holds one bucket's live keys
+    * in memory (un-spillable), and a snapshot without a uniform write
+    * contract on the partition key (mixed moduli, unproven files,
+    * files bucketed on another column) resolves in ONE partition.
+    * Whole-table folds therefore keep [[latestOver]]'s aggregate,
+    * which can spill. */
   def latest(spark: SparkSession, path: String): DataFrame = {
-    val keys = tableKeys(path).getOrElse(throw new IllegalArgumentException(
-      s"KeyedTable at $path has no declared or proven key column"))
-    val snap = KeyedTable.snapshotInfo(path)
-    val pin = Map("manifests" -> snap.pinOption)
-    val df = tableDF(spark, path, pin)
-    if (keys.size == 1) latestOver(df, keys)
-    else {
-      val dataCols = df.columns.toSeq
-      val withMeta = df.select(dataCols.map(col) ++ Seq(
-        col(KeyedTable.MetaSeq), col(KeyedTable.MetaPos),
-        col(KeyedTable.MetaTombstone)): _*)
-      val cuts =
-        if (snap.hasTombstones) Some(tombstoneCuts(spark, path, keys.head, pin))
-        else None // no deletes in the pinned snapshot: no cut join
-      compositeResolve(withMeta, keys, cuts, dataCols)
-    }
+    if (tableKey(path).isEmpty) throw new IllegalArgumentException(
+      s"KeyedTable at $path has no declared or proven key column")
+    tableDF(spark, path, Map(
+      "manifests" -> KeyedTable.liveManifestNames(path).mkString(","),
+      "view" -> "current"))
   }
 
   /** CASSANDRA COUNTER COLUMNS: the table as a distributed counter —
@@ -364,16 +382,8 @@ object KeyedTableOps {
     val snap = KeyedTable.snapshotInfo(path)
     val pin = Map("manifests" -> snap.pinOption)
     val df = tableDF(spark, path, pin)
-    val ver = struct(col(KeyedTable.MetaSeq), col(KeyedTable.MetaPos))
-    val withMeta = df.select((keys ++ valueCols).distinct.map(col) ++ Seq(
-      col(KeyedTable.MetaSeq), col(KeyedTable.MetaPos),
-      col(KeyedTable.MetaTombstone)): _*)
-    val survivors = withMeta.where(!col(KeyedTable.MetaTombstone))
-    val live =
-      if (snap.hasTombstones) survivors
-        .join(broadcast(tombstoneCuts(spark, path, pk, pin)), Seq(pk), "left")
-        .where(col("__cut").isNull || ver > col("__cut"))
-      else survivors // no deletes in the pinned snapshot: nothing to cut
+    val live = survivors(versioned(df, (keys ++ valueCols).distinct), pk,
+      if (snap.hasTombstones) Some(tombstoneCuts(spark, path, pk, pin)) else None)
     live.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("n_inc"),
         valueCols.map(c => sum(col(c)).as(s"sum_$c")): _*)
@@ -390,8 +400,7 @@ object KeyedTableOps {
     tableDF(spark, path, scanOpts + ("tombstones" -> "only"))
       .select(col(pk), col(KeyedTable.MetaSeq), col(KeyedTable.MetaPos))
       .groupBy(col(pk))
-      .agg(max(struct(col(KeyedTable.MetaSeq), col(KeyedTable.MetaPos)))
-        .as("__cut"))
+      .agg(max(version).as("__cut"))
 
   /** Fold the live commit log into ONE snapshot commit — Cassandra's
     * compaction / Delta's OPTIMIZE, as a Spark job over the table
@@ -404,8 +413,10 @@ object KeyedTableOps {
     *     versions the fold hasn't seen).
     *  2. Read the table AS OF the fence (max input sequence) — which
     *     is exactly the inputs plus any still-live tombstone at or
-    *     below the fence — and resolve last-write-wins. Tombstones at
-    *     or below the fence apply (idempotently, if they stay live);
+    *     below the fence — and resolve last-write-wins through
+    *     [[latestOver]]'s aggregate, which can spill (a fold reads the
+    *     whole table). Tombstones at or below the fence apply
+    *     (idempotently, if they stay live);
     *     anything ABOVE the fence, tombstone or data, outranks the
     *     snapshot at read time, so racing commits lose nothing.
     *  3. Write the winners back through the table's own clustered V2
@@ -481,6 +492,8 @@ object KeyedTableOps {
     val dataCols = asOf.columns.toSeq
     val hasTombs = live.exists(m =>
       m.seq <= fence && m.entries.exists(_.tombstone))
+    lazy val cuts =
+      if (hasTombs) Some(tombstoneCuts(spark, path, keys.head, pin)) else None
     val snapshot = discipline match {
       case "counter" =>
         // COUNTER FOLD: Cassandra compaction merges counter shards
@@ -502,29 +515,11 @@ object KeyedTableOps {
         require(badTypes.isEmpty,
           s"counter fold at $path needs LONG/DOUBLE counter columns; " +
             s"${badTypes.mkString(",")} cannot accumulate sums losslessly")
-        val ver = struct(col(KeyedTable.MetaSeq), col(KeyedTable.MetaPos))
-        val withMeta = asOf.select(dataCols.map(col) ++ Seq(
-          col(KeyedTable.MetaSeq), col(KeyedTable.MetaPos),
-          col(KeyedTable.MetaTombstone)): _*)
-        val survivors = withMeta.where(!col(KeyedTable.MetaTombstone))
-        val cut =
-          if (hasTombs) survivors
-            .join(broadcast(tombstoneCuts(spark, path, keys.head, pin)),
-              Seq(keys.head), "left")
-            .where(col("__cut").isNull || ver > col("__cut"))
-          else survivors
-        cut.groupBy(keys.map(col): _*)
-          .agg(sum(col(counterCols.head)).as(counterCols.head),
-            counterCols.tail.map(c => sum(col(c)).as(c)): _*)
-          .select(dataCols.map(col): _*)
+        counterSums(survivors(versioned(asOf, dataCols), keys.head, cuts),
+          keys, counterCols, dataCols)
       case "lww" if keys.size == 1 => latestOver(asOf, keys)
       case "lww" =>
-        val withMeta = asOf.select(dataCols.map(col) ++ Seq(
-          col(KeyedTable.MetaSeq), col(KeyedTable.MetaPos),
-          col(KeyedTable.MetaTombstone)): _*)
-        compositeResolve(withMeta, keys,
-          if (hasTombs) Some(tombstoneCuts(spark, path, keys.head, pin))
-          else None, dataCols)
+        compositeResolve(versioned(asOf, dataCols), keys, cuts, dataCols)
       case other => throw new IllegalArgumentException(
         s"unknown merge discipline '$other' at $path (lww|counter)")
     }
@@ -671,8 +666,9 @@ object KeyedTableOps {
     * time-travelable until vacuum's grace expires — rollback rewinds
     * the state, never the log). The restore rides the existing atomic
     * overwrite: read the table AS OF `toSeq`, resolve it under the
-    * table's merge discipline, and commit the resolved rows in a
-    * manifest that supersedes everything live — truncate-then-load in
+    * table's merge discipline (LWW through [[latestOver]]'s aggregate,
+    * which can spill), and commit the resolved rows in a manifest
+    * that supersedes everything live — truncate-then-load in
     * one commit, readers never see an intermediate state and a racing
     * write simply outranks the restore under last-write-wins.
     *
@@ -718,20 +714,9 @@ object KeyedTableOps {
         val counterCols = dataCols.filterNot(keys.contains)
         require(counterCols.nonEmpty,
           s"counter table at $path has no non-key columns to accumulate")
-        val ver = struct(col(KeyedTable.MetaSeq), col(KeyedTable.MetaPos))
-        val withMeta = asOf.select(dataCols.map(col) ++ Seq(
-          col(KeyedTable.MetaSeq), col(KeyedTable.MetaPos),
-          col(KeyedTable.MetaTombstone)): _*)
-        val survivors = withMeta.where(!col(KeyedTable.MetaTombstone))
-        val cuts = withMeta.where(col(KeyedTable.MetaTombstone))
-          .groupBy(col(keys.head)).agg(max(ver).as("__cut"))
-        survivors
-          .join(broadcast(cuts), Seq(keys.head), "left")
-          .where(col("__cut").isNull || ver > col("__cut"))
-          .groupBy(keys.map(col): _*)
-          .agg(sum(col(counterCols.head)).as(counterCols.head),
-            counterCols.tail.map(c => sum(col(c)).as(c)): _*)
-          .select(dataCols.map(col): _*)
+        val withMeta = versioned(asOf, dataCols)
+        counterSums(survivors(withMeta, keys.head,
+          Some(cutsOf(withMeta, keys.head))), keys, counterCols, dataCols)
       case _ => latestOver(asOf, keys)
     }
     restored.write.format("graft.sources.KeyedTable")
@@ -894,8 +879,7 @@ object KeyedTableOps {
         slice.select(evCols: _*).unionByName(asOf)
       }
     val rest = dataCols.filterNot(_ == pk)
-    val ver = struct(col(KeyedTable.MetaSeq), col(KeyedTable.MetaPos))
-    val w = Window.partitionBy(col(pk)).orderBy(ver)
+    val w = Window.partitionBy(col(pk)).orderBy(version)
     val prev = lag(struct(
       col(KeyedTable.MetaTombstone).as("__tomb") +: rest.map(col): _*), 1)
       .over(w)

@@ -130,4 +130,22 @@ class KCdfStreamSpec extends SparkSpecBase {
     assert(streamed.count(_._5 <= headBefore) ===
       streamed.size - 2, "the fold must not re-deliver consumed rows")
   }
+
+  test("NaN and -0.0 key versions classify as updates, as in the batch feed") {
+    val s = spark
+    import s.implicits._
+    val base = tmpDir("graft_cdfs_nan_")
+    val t = s"$base/t"
+    val dsink = V2KeyedTableSink("k", writeParallelism = 2)
+    dsink.append(Seq(Double.NaN -> "a", -0.0 -> "a").toDF("k", "s"), t)
+    dsink.append(Seq(Double.NaN -> "b", 0.0 -> "b").toDF("k", "s"), t)
+    runCdf(t, s"$base/out", s"$base/ckpt")
+    def events(df: DataFrame): Seq[String] =
+      df.select("s", "_change_type", "_commit_version").collect()
+        .map(_.toSeq.mkString("|")).toSeq.sorted
+    val streamed = events(spark.read.parquet(s"$base/out"))
+    assert(streamed === events(batchCdf(t)))
+    assert(streamed === Seq("a|insert|1", "a|insert|1", "a|update_preimage|2",
+      "a|update_preimage|2", "b|update_postimage|2", "b|update_postimage|2"))
+  }
 }

@@ -212,24 +212,6 @@ class PipelineSpec extends SparkSpecBase {
     assert(storage.checkpointExists(dir, "part-0.parquet"))
   }
 
-  /** Spark jobs `body` runs on this thread, counted by job group. The
-    * status store is fed asynchronously, so a marker job is run after
-    * `body` and awaited: once it shows, every earlier job has too. */
-  private def jobsRun(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    def inGroup(g: String)(f: => Unit): Unit = {
-      sc.setJobGroup(g, g)
-      try f finally sc.clearJobGroup()
-    }
-    val group = s"jobs-${java.util.UUID.randomUUID()}"
-    inGroup(group)(body)
-    inGroup(s"$group-marker")(sc.parallelize(Seq(1), 1).count())
-    val deadline = System.currentTimeMillis() + 30000
-    while (sc.statusTracker.getJobIdsForGroup(s"$group-marker").isEmpty &&
-      System.currentTimeMillis() < deadline) Thread.sleep(10)
-    sc.statusTracker.getJobIdsForGroup(group).length
-  }
-
   test("resume load runs one Spark job per staged file; a no-op re-launch runs none") {
     val ws = freshWorkspace()
     val sp = run(ws)

@@ -13,8 +13,9 @@ import scala.util.Random
   * and a plain in-memory Map with the obvious semantics; after every
   * few steps — and after a mid-sequence compaction and a rebucket —
   * the table's resolved state must equal the model EXACTLY, through
-  * BOTH resolution paths (the declarative latest() aggregate and the
-  * reader-resolved view=current scan). Divergence between three
+  * BOTH resolution paths (the declarative latestOver aggregate over the
+  * raw log and the reader-resolved view=current scan that latest()
+  * reads). Divergence between three
   * independent implementations of the same semantics is the strongest
   * cheap signal this state machine can produce. */
 class RowLevelModelSpec extends SparkSpecBase {
@@ -33,7 +34,8 @@ class RowLevelModelSpec extends SparkSpecBase {
   }
 
   private def tableState(t: String): Map[Long, (String, Long)] =
-    KeyedTableOps.latest(spark, t).collect()
+    KeyedTableOps.latestOver(
+      spark.read.format("graft.sources.KeyedTable").load(t), "k").collect()
       .map(r => r.getLong(0) -> (r.getString(1), r.getLong(2))).toMap
 
   private def viewState(t: String): Map[Long, (String, Long)] =
@@ -117,7 +119,7 @@ class RowLevelModelSpec extends SparkSpecBase {
           val want = model.toMap
           val gotLatest = tableState(t)
           assert(gotLatest === want,
-            s"latest() diverged from the model at step $step: " +
+            s"latestOver diverged from the model at step $step: " +
               s"extra=${gotLatest.keySet -- want.keySet} " +
               s"missing=${want.keySet -- gotLatest.keySet} " +
               s"diff=${want.collect { case (k, v) if gotLatest.get(k).exists(_ != v) => k -> (v, gotLatest(k)) }}")

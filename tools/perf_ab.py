@@ -2,8 +2,9 @@
 """A/B the repository benchmark between two versions of the code.
 
 Usage (from the repository root):
-  python3 tools/perf_ab.py --workload migrate --seed 29 --pairs 10 \\
-      [--base HEAD] [--change WORKTREE] [--seconds 20] [--dir DIR] [--out ab.json]
+  python3 tools/perf_ab.py --workload migrate [--workload catalog_headline ...] \\
+      --seed 29 --pairs 10 [--base HEAD] [--change WORKTREE] [--seconds 20] \\
+      [--dir DIR] [--out ab.json]
 
 Each side is a git revision, or WORKTREE for the working tree as it
 stands (tracked and untracked files, ignored ones left out). Each side
@@ -14,7 +15,11 @@ first, and prints, for every end-to-end metric of BENCHMARK.json, each
 side's median and quartiles and the pairs the change won (ties count
 for neither side). A gain is CLAIMED only when the change wins at least
 nine tenths of the pairs and the medians differ by more than the
-distance between the base's quartiles.
+distance between the base's quartiles. Each --workload gets its own
+pairs and its own table, so one invocation checks a claimed gain and
+the other workloads' "no regression" side together. When a side's
+first run of a workload fails, the script prints that run's output
+tail and stops: the remaining pairs would fail the same way.
 """
 import argparse
 import json
@@ -46,10 +51,10 @@ def export(side, dest):
         subprocess.run(["tar", "-x", "-C", dest], input=archive, check=True)
 
 
-def run_once(checkout, a):
-    """One benchmark run; returns its end-to-end metrics, or None when the
-    run failed or was not correct."""
-    p = subprocess.run([sys.executable, "perfbench/run.py", "--workload", a.workload,
+def run_once(checkout, workload, a):
+    """One benchmark run: (end-to-end metrics, None), or (None, output tail)
+    when the run failed or was not correct."""
+    p = subprocess.run([sys.executable, "perfbench/run.py", "--workload", workload,
                         "--seed", str(a.seed), "--seconds", str(a.seconds),
                         "--trace", "0"], cwd=checkout, capture_output=True, text=True)
     lines = p.stdout.strip().splitlines()
@@ -58,10 +63,9 @@ def run_once(checkout, a):
     except (IndexError, ValueError):
         res = {"correct": False}
     if p.returncode != 0 or not res.get("correct"):
-        sys.stderr.write("run failed in %s (exit %d):\n%s\n"
-                         % (checkout, p.returncode, (p.stdout + p.stderr)[-2000:]))
-        return None
-    return {k: v["value"] for k, v in res["metrics"].items()}
+        return None, "run failed in %s (exit %d):\n%s\n" % (
+            checkout, p.returncode, (p.stdout + p.stderr)[-2000:])
+    return {k: v["value"] for k, v in res["metrics"].items()}, None
 
 
 def quartiles(xs):
@@ -69,9 +73,52 @@ def quartiles(xs):
     return med, q1, q3
 
 
+def run_pairs(workload, sides, a):
+    """N alternating pairs of one workload; None when a side's first run failed."""
+    pairs = []
+    for i in range(a.pairs):
+        order = ["base", "change"] if i % 2 == 0 else ["change", "base"]
+        pair = {}
+        for s in order:
+            pair[s], tail = run_once(sides[s], workload, a)
+            if tail:
+                sys.stderr.write(tail)
+                if not pairs:
+                    sys.stderr.write("%s: the %s side's first run failed; stopping\n"
+                                     % (workload, s))
+                    return None
+        pairs.append(pair)
+        print("%s pair %d (%s first): %s" % (workload, i + 1, order[0], json.dumps(pair)),
+              flush=True)
+    return pairs
+
+
+def report(workload, pairs, bench, a):
+    """Print one workload's table; False when too few pairs ran on both sides."""
+    ok = [p for p in pairs if p["base"] and p["change"]]
+    print("\n%s seed=%d: %d of %d pairs ran correctly on both sides (base=%s change=%s)"
+          % (workload, a.seed, len(ok), len(pairs), a.base, a.change))
+    if len(ok) < 2:
+        return False
+    print("%-12s %26s %26s %7s  %s" % ("metric", "base median [q1, q3]",
+                                      "change median [q1, q3]", "won", "claim"))
+    for m in bench["end_to_end"]:
+        name, lower = m["name"], m["better"] == "lower"
+        b = [p["base"][name] for p in ok]
+        c = [p["change"][name] for p in ok]
+        (bm, b1, b3), (cm, c1, c3) = quartiles(b), quartiles(c)
+        won = sum(1 for x, y in zip(b, c) if (y < x if lower else y > x))
+        better = cm < bm if lower else cm > bm
+        claim = better and won * 10 >= 9 * len(pairs) and abs(cm - bm) > b3 - b1
+        print("%-12s %10.1f [%6.1f, %6.1f] %10.1f [%6.1f, %6.1f] %3d/%-3d  %s"
+              % (name, bm, b1, b3, cm, c1, c3, won, len(ok), "yes" if claim else "no"))
+    return True
+
+
 def main():
     ap = argparse.ArgumentParser()
-    ap.add_argument("--workload", required=True)
+    ap.add_argument("--workload", action="append", required=True,
+                    help="a workload of BENCHMARK.json; repeat for several")
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--base", default="HEAD")
@@ -88,35 +135,17 @@ def main():
     export(a.base, sides["base"])
     export(a.change, sides["change"])
 
-    pairs = []
-    for i in range(a.pairs):
-        order = ["base", "change"] if i % 2 == 0 else ["change", "base"]
-        pair = {s: run_once(sides[s], a) for s in order}
-        pairs.append(pair)
-        print("pair %d (%s first): %s" % (i + 1, order[0], json.dumps(pair)), flush=True)
+    results = {}
+    for w in a.workload:
+        results[w] = run_pairs(w, sides, a)
+        if results[w] is None:
+            break
     if a.out:
         with open(a.out, "w") as f:
-            json.dump({"workload": a.workload, "seed": a.seed, "seconds": a.seconds,
-                       "base": a.base, "change": a.change, "pairs": pairs}, f, indent=1)
-
-    ok = [p for p in pairs if p["base"] and p["change"]]
-    print("\n%s seed=%d: %d of %d pairs ran correctly on both sides (base=%s change=%s)"
-          % (a.workload, a.seed, len(ok), len(pairs), a.base, a.change))
-    if len(ok) < 2:
-        return 1
-    print("%-12s %26s %26s %7s  %s" % ("metric", "base median [q1, q3]",
-                                      "change median [q1, q3]", "won", "claim"))
-    for m in bench["end_to_end"]:
-        name, lower = m["name"], m["better"] == "lower"
-        b = [p["base"][name] for p in ok]
-        c = [p["change"][name] for p in ok]
-        (bm, b1, b3), (cm, c1, c3) = quartiles(b), quartiles(c)
-        won = sum(1 for x, y in zip(b, c) if (y < x if lower else y > x))
-        better = cm < bm if lower else cm > bm
-        claim = better and won * 10 >= 9 * len(pairs) and abs(cm - bm) > b3 - b1
-        print("%-12s %10.1f [%6.1f, %6.1f] %10.1f [%6.1f, %6.1f] %3d/%-3d  %s"
-              % (name, bm, b1, b3, cm, c1, c3, won, len(ok), "yes" if claim else "no"))
-    return 0
+            json.dump({"seed": a.seed, "seconds": a.seconds, "base": a.base,
+                       "change": a.change, "workloads": results}, f, indent=1)
+    reported = [report(w, pairs, bench, a) for w, pairs in results.items() if pairs]
+    return 0 if len(reported) == len(a.workload) and all(reported) else 1
 
 
 if __name__ == "__main__":
