@@ -127,7 +127,7 @@ class KeyedTable extends TableProvider {
     require(path != null, "KeyedTable requires a path")
     new KeyedTable.KTable(path, schema,
       Option(opts.get("key")),
-      opts.getInt("writePartitions", 8),
+      Option(opts.get("writePartitions")).map(_.toInt),
       opts.getBoolean("clusteredRead", false),
       Option(opts.get("chaosWriteKey")).map(_.toLong),
       Option(opts.get("commitName")),
@@ -449,10 +449,30 @@ object KeyedTable {
     * clustering columns — ONE parse shared by the advertised schema,
     * the view=current scan, and the row-level operation builder (three
     * hand-kept copies would drift). */
-  private[sources] def fullPrimaryKey(path: String, conf: Configuration,
+  private[sources] def fullPrimaryKey(props: Map[String, String],
       key: String): Seq[String] =
-    key +: readProps(path, conf).get("clustering")
+    key +: props.get("clustering")
       .map(KeyedTableOps.parseClustering).getOrElse(Seq.empty)
+
+  /** The table's write contract as far as it is known: declared
+    * properties win, else the contract the live manifests prove
+    * ([[inferWriteContract]], listed only when a declaration is
+    * missing). ONE resolution for every table handle, path or
+    * catalog, and [[KeyedTableOps.tableKey]], so a keyless path write
+    * clusters like the catalog's INSERT INTO and like the reads. */
+  private[sources] def declaredContract(path: String, conf: Configuration,
+      props: Map[String, String]): (Option[String], Option[Int]) = {
+    lazy val inferred = inferWriteContract(path, conf)
+    val parts = props.get("writePartitions").map { v =>
+      val n = try v.toInt catch { case _: NumberFormatException =>
+        throw new IllegalArgumentException(
+          s"table property writePartitions='$v' at $path is not an integer") }
+      require(n > 0, s"table property writePartitions=$n at $path must be positive")
+      n
+    }
+    (props.get("key").orElse(inferred.map(_._1)),
+      parts.orElse(inferred.map(_._2)))
+  }
 
   private[sources] def readProps(path: String,
       conf: Configuration): Map[String, String] = {
@@ -1301,9 +1321,13 @@ object KeyedTable {
     * instead of the write's query id, making a re-run of the same
     * logical append (a resume re-driving a staged file through the
     * sink) a no-op replay instead of a duplicate — the batch twin of
-    * the streaming epoch protocol. */
+    * the streaming epoch protocol.
+    * `keyCol` / `writePartitions`: the `key` / `writePartitions`
+    * options; absent, each resolves through [[declaredContract]]
+    * (declared `_props`, else the proven write contract), so reads,
+    * deletes and writes of one handle agree on the table's key. */
   private[sources] final class KTable(path: String, schema0: StructType,
-      keyCol: Option[String], writePartitions: Int,
+      keyCol: Option[String], writePartitions: Option[Int],
       clusteredRead: Boolean = false, chaosKey: Option[Long] = None,
       commitName: Option[String] = None, asOfSeq: Option[Long] = None,
       rewrite: Option[(Long, Seq[String])] = None,
@@ -1323,14 +1347,18 @@ object KeyedTable {
       * the committed manifests are shown (what a write would actually
       * use), so an operator reads the real contract, not a blank. */
     override def properties(): java.util.Map[String, String] = {
-      val conf = hadoopConf()
       val m = new java.util.HashMap[String, String]()
-      inferWriteContract(path, conf).foreach { case (k, n) =>
+      inferWriteContract(path, hadoopConf()).foreach { case (k, n) =>
         m.put("key", k); m.put("writePartitions", n.toString)
       }
-      readProps(path, conf).foreach { case (k, v) => m.put(k, v) }
+      props.foreach { case (k, v) => m.put(k, v) }
       m
     }
+
+    /** The persisted properties, read once per handle: the key
+      * resolution, the full primary key and the legacy frame width
+      * all answer from this one read. */
+    private lazy val props: Map[String, String] = readProps(path, hadoopConf())
 
     /** The table's declared primary-key columns: the partition key
       * plus any declared clustering columns. Advertised NON-NULLABLE
@@ -1358,13 +1386,12 @@ object KeyedTable {
       * set holds NO tombstone entries; the partition-key column's proof
       * stands regardless (markers populate it by construction). */
     private lazy val primaryKeyCols: Set[String] = {
-      val conf = hadoopConf()
-      val keys = fullPrimaryKey(path, conf, resolvedKey)
+      val keys = fullPrimaryKey(props, resolvedKey)
       val idxs = keys.map(k => dataSchema.fieldNames.indexOf(k))
       if (idxs.exists(_ < 0)) Set.empty
       else {
         val clustering = idxs.tail
-        val entries = liveManifests(path, conf).flatMap(_.entries)
+        val entries = liveManifests(path, hadoopConf()).flatMap(_.entries)
         val keyProven = entries.forall(_.stats.exists(_.nulls == 0L))
         val clusteringProven = !entries.exists(_.tombstone) &&
           entries.forall(e => clustering.forall(i =>
@@ -1440,15 +1467,21 @@ object KeyedTable {
         throw new UnsupportedOperationException(
           s"KeyedTable DELETE needs a key-only predicate; got " +
             filters.mkString(", ")))
-      deleteKeys(path, dataSchema, resolvedKey, keys, writePartitions,
+      deleteKeys(path, dataSchema, resolvedKey, keys, resolvedParts,
         hadoopConf())
     }
 
-    /** The `key` option, else the catalog loader's declared-or-proven
-      * key, else (last resort) the first column. */
-    private lazy val resolvedKey: String = keyCol
-      .orElse(KeyedTableOps.tableKey(path))
+    private lazy val contract = declaredContract(path, hadoopConf(), props)
+
+    /** The `key` option, else the declared-or-proven key, else (last
+      * resort) the first column. */
+    private lazy val resolvedKey: String = keyCol.orElse(contract._1)
       .getOrElse(dataSchema.fieldNames.head)
+
+    /** The `writePartitions` option, else the declared-or-proven
+      * modulus, else 8. */
+    private lazy val resolvedParts: Int =
+      writePartitions.orElse(contract._2).getOrElse(8)
 
     private def deleteKeyLiterals(filters: Array[Filter]): Option[Seq[Any]] = {
       import org.apache.spark.sql.sources._
@@ -1496,7 +1529,7 @@ object KeyedTable {
         require(asOfSeq.isEmpty && !withVersion,
           "readChangeFeed streams the classified log from a plain " +
             "table handle; asOfSeq/withVersion do not compose")
-        val keys = fullPrimaryKey(path, hadoopConf(), resolvedKey)
+        val keys = fullPrimaryKey(props, resolvedKey)
         require(keys.size == 1,
           s"readChangeFeed supports single-column keys; $path clusters " +
             s"on ${keys.mkString(",")} (a composite table's partition " +
@@ -1555,7 +1588,7 @@ object KeyedTable {
           require(tombMode == "include",
             "view=current applies tombstones itself; tombstones=" +
               s"$tombMode contradicts that")
-          Some(fullPrimaryKey(path, hadoopConf(), resolvedKey))
+          Some(fullPrimaryKey(props, resolvedKey))
         }
       // auto-pin only the CURRENT view (an as-of read is already a
       // fixed point; pinning today's live names under it would hide
@@ -1564,8 +1597,8 @@ object KeyedTable {
         if (resolve.isDefined && asOf.isEmpty)
           Some(snapshotInfo(path).names.toSet)
         else None)
-      new KScanBuilder(path, dataSchema, schema0, only, perTrigger,
-        clusteredRead, asOf, tombMode, pin, changes, resolve)
+      new KScanBuilder(path, dataSchema, schema0, legacyNcols(props, dataSchema),
+        only, perTrigger, clusteredRead, asOf, tombMode, pin, changes, resolve)
     }
 
     override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
@@ -1577,7 +1610,9 @@ object KeyedTable {
           "reader-synthesized)")
       val schema = info.schema()
       validateSchema(schema)
-      val key = keyCol.getOrElse(schema.fieldNames.head)
+      // the write schema's first column is the last resort (a new
+      // table's handle may carry no committed schema yet)
+      val key = keyCol.orElse(contract._1).getOrElse(schema.fieldNames.head)
       require(schema.fieldNames.contains(key),
         s"key column '$key' not in write schema ${schema.fieldNames.mkString(",")}")
       new WriteBuilder
@@ -1589,7 +1624,7 @@ object KeyedTable {
           * readers never see an intermediate empty table. */
         override def truncate(): WriteBuilder = { truncate0 = true; this }
         override def build(): Write =
-          new KWrite(path, schema, key, writePartitions, info.queryId(),
+          new KWrite(path, schema, key, resolvedParts, info.queryId(),
             chaosKey, commitName, rewrite, truncate0, ttlMs,
             sortOrder, maxFileRows, blockRows, preshaped)
       }
@@ -1644,11 +1679,11 @@ object KeyedTable {
       require(!withVersion,
         "a withVersion read handle is read-only (version columns are " +
           "reader-synthesized)")
-      val keys = fullPrimaryKey(path, hadoopConf(), resolvedKey)
+      val keys = fullPrimaryKey(props, resolvedKey)
       keys.foreach(k => require(dataSchema.fieldNames.contains(k),
         s"primary-key column '$k' is not a column of $dataSchema"))
-      () => new KRowLevelOp(path, dataSchema, keys, writePartitions,
-        clusteredRead, info.command)
+      () => new KRowLevelOp(path, dataSchema, keys, resolvedParts,
+        legacyNcols(props, dataSchema), clusteredRead, info.command)
     }
   }
 
@@ -1660,8 +1695,8 @@ object KeyedTable {
     * clustering columns) — the unit the storage layer upserts and
     * tombstones by. */
   private final class KRowLevelOp(path: String, dataSchema: StructType,
-      keys: Seq[String], writePartitions: Int, clusteredRead: Boolean,
-      cmd: RowLevelOperation.Command)
+      keys: Seq[String], writePartitions: Int, legacyNcols: Int,
+      clusteredRead: Boolean, cmd: RowLevelOperation.Command)
       extends RowLevelOperation with SupportsDelta {
     // snapshot pin at operation build: every scan this statement plans
     // reads the same immutable manifest set (commits racing the
@@ -1698,7 +1733,7 @@ object KeyedTable {
       * predicates keep every version and marker of the surviving keys,
       * so resolution stays exact. */
     override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-      new KScanBuilder(path, dataSchema, dataSchema, None, 10,
+      new KScanBuilder(path, dataSchema, dataSchema, legacyNcols, None, 10,
         clusteredRead, None, "include", Some(pinned), None,
         resolve = Some(keys))
 
@@ -3357,9 +3392,8 @@ object KeyedTable {
   /** Frame width for pre-evolution manifests (no #ncols header): the
     * `baseNcols` property recorded at the first evolution, else the
     * full schema (a never-evolved table). */
-  private def legacyNcols(path: String, conf: Configuration,
-      full: StructType): Int =
-    readProps(path, conf).get("baseNcols")
+  private def legacyNcols(props: Map[String, String], full: StructType): Int =
+    props.get("baseNcols")
       .flatMap(v => scala.util.Try(v.toInt).toOption)
       .getOrElse(full.length)
 
@@ -3369,8 +3403,8 @@ object KeyedTable {
     * default (un-pruned, e.g. streaming) read schema must include
     * them. */
   private final class KScanBuilder(path: String, tableSchema: StructType,
-      advertised: StructType, only: Option[String], perTrigger: Int,
-      clusteredRead: Boolean, asOfSeq: Option[Long],
+      advertised: StructType, legacyNcols: Int, only: Option[String],
+      perTrigger: Int, clusteredRead: Boolean, asOfSeq: Option[Long],
       tombMode: String = "include",
       pinned: Option[Set[String]] = None,
       changes: Option[(Long, Long)] = None,
@@ -3388,6 +3422,8 @@ object KeyedTable {
     private var pruningFilters: Array[Filter] = Array.empty
     private var pushedAgg: Option[Seq[KAggSpec]] = None
     private var limit: Option[Int] = None
+    // a resolving scan's pinned partition key (Catalyst domain)
+    private var pointKey: Option[Any] = None
 
     /** PARTIAL limit pushdown: a LIMIT-k read without an ordering may
       * return ANY k rows, so the scan plans only enough files (row
@@ -3409,6 +3445,7 @@ object KeyedTable {
     override def isPartiallyPushed: Boolean = true
 
     override def pushFilters(filters: Array[Filter]): Array[Filter] = {
+      import org.apache.spark.sql.sources.{EqualTo, IsNotNull}
       pruningFilters = resolve match {
         // current-state scans prune by the PARTITION KEY only: every
         // version and marker of a key shares its key value, so key
@@ -3418,8 +3455,23 @@ object KeyedTable {
           .filter(fl => attrOf(fl).contains(ks.head))
         case None => filters.filter(prunable)
       }
-      // ALL filters stay Spark's to evaluate: stats prune FILES only
-      filters
+      // A resolving scan pinned by `pk = v` reads on the driver
+      // ([[KPointScan]]) and keeps only v's versions and tombstone
+      // cuts, so it applies that filter and `pk IS NOT NULL` exactly:
+      // both leave the residual. Every other filter stays Spark's to
+      // evaluate: stats prune FILES only.
+      val pin = resolve.flatMap(ks => tableSchema.find(_.name == ks.head))
+        .flatMap { pk =>
+          filters.iterator.map {
+            case eq @ EqualTo(a, v) if a == pk.name =>
+              toCatalyst(pk.dataType, v).map(eq -> _)
+            case _ => None
+          }.collectFirst { case Some(p) => p }
+        }
+      pointKey = pin.map(_._2)
+      pin.fold(filters) { case (eq, _) =>
+        filters.filterNot(fl => fl == eq || fl == IsNotNull(eq.attribute))
+      }
     }
     override def pushedFilters(): Array[Filter] = pruningFilters
     override def pruneColumns(requiredSchema: StructType): Unit =
@@ -3458,10 +3510,9 @@ object KeyedTable {
     private lazy val statsSplits: Option[Seq[KSplit]] =
       if (changes.isDefined) None // a change feed reads ROWS
       else {
-        val legacy = legacyNcols(path, hadoopConf(), tableSchema)
         val splits = liveSplits(path, hadoopConf(), asOfSeq, pinned)
           .filter(sp => tombSelect(sp.entry))
-          .map(sp => if (sp.ncols >= 0) sp else sp.copy(ncols = legacy))
+          .map(sp => if (sp.ncols >= 0) sp else sp.copy(ncols = legacyNcols))
         val chosen = only match {
           case Some(f) => splits.filter(_.entry.file == f)
           case None => splits
@@ -3551,10 +3602,12 @@ object KeyedTable {
         val key = splits.headOption.map(_.entry.key).getOrElse("")
         new KAggScan(path, splits, specs,
           idx => sp => colStatsOf(sp, idx, key))
-      case None => new KScan(path, tableSchema, required,
-        pruningFilters, only, perTrigger, clusteredRead, asOfSeq,
-        tombMode, pinned, changes, limit, new SerConf(hadoopConf()),
-        resolve)
+      case None =>
+        val scan = new KScan(path, tableSchema, required,
+          pruningFilters, only, perTrigger, clusteredRead, asOfSeq,
+          tombMode, pinned, changes, limit, new SerConf(hadoopConf()),
+          legacyNcols, resolve, pointKey)
+        if (pointKey.isDefined) new KPointScan(scan) else scan
     }
 
     private def tombSelect(e: KFileEntry): Boolean = tombMode match {
@@ -3692,8 +3745,8 @@ object KeyedTable {
       manifestsPerTrigger: Int, clusteredRead: Boolean,
       asOfSeq: Option[Long], tombMode: String,
       pinned: Option[Set[String]], changes: Option[(Long, Long)],
-      limitRows: Option[Int], conf: SerConf,
-      resolve: Option[Seq[String]] = None)
+      limitRows: Option[Int], conf: SerConf, legacyNcols: Int,
+      resolve: Option[Seq[String]] = None, pointKey: Option[Any] = None)
       extends Scan with Batch with SupportsReportPartitioning
       with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering
       with org.apache.spark.sql.connector.read.SupportsReportStatistics {
@@ -4051,10 +4104,9 @@ object KeyedTable {
     override def createReaderFactory(): PartitionReaderFactory =
       resolve match {
         case Some(keys) => new KResolvingReaderFactory(tableSchema,
-          required, keys, conf, legacyNcols(path, conf.value, tableSchema),
-          filters)
+          required, keys, conf, legacyNcols, filters, pointKey)
         case None => new KReaderFactory(tableSchema, required, conf,
-          legacyNcols(path, conf.value, tableSchema), filters)
+          legacyNcols, filters)
       }
 
     /** Reader-side observability: how many row-log rows were actually
@@ -4076,6 +4128,33 @@ object KeyedTable {
         "view=current is a batch view; tail the log (the default) and " +
           "resolve downstream, or read batches of the current view")
       new KTailStream(path, tableSchema, required, manifestsPerTrigger, conf)
+    }
+  }
+
+  /** A resolving scan pinned to ONE partition key, answered on the
+    * driver while Spark plans it: Spark plans a `LocalTableScanExec`,
+    * and collecting that runs no job — a Cassandra coordinator merging
+    * one partition's versions, not a batch job. Key pruning leaves the
+    * scan at most one read partition (the key's write bucket under a
+    * uniform contract, else the single fallback group), so the driver
+    * does exactly the work of the one task it replaces and no
+    * parallelism is lost. The statistics stay the pruned scan's, so a
+    * point read joined to another relation still broadcasts. */
+  private final class KPointScan(scan: KScan)
+      extends org.apache.spark.sql.connector.read.LocalScan
+      with org.apache.spark.sql.connector.read.SupportsReportStatistics {
+    override def readSchema(): StructType = scan.readSchema()
+    override def description(): String = scan.description()
+    override def estimateStatistics()
+        : org.apache.spark.sql.connector.read.Statistics =
+      scan.estimateStatistics()
+    override def rows(): Array[InternalRow] = {
+      val factory = scan.createReaderFactory()
+      scan.planInputPartitions().flatMap { p =>
+        val r = factory.createReader(p)
+        try Iterator.continually(r).takeWhile(_.next()).map(_.get().copy()).toArray
+        finally r.close()
+      }
     }
   }
 
@@ -4169,7 +4248,7 @@ object KeyedTable {
     }
     override def createReaderFactory(): PartitionReaderFactory =
       new KReaderFactory(tableSchema, required, conf,
-        legacyNcols(path, conf.value, tableSchema))
+        legacyNcols(readProps(path, conf.value), tableSchema))
     override def commit(end: V2Offset): Unit = ()
     override def stop(): Unit = ()
   }
@@ -4306,7 +4385,7 @@ object KeyedTable {
     }
     override def createReaderFactory(): PartitionReaderFactory =
       new KCdfReaderFactory(dataSchema, pk, conf,
-        legacyNcols(path, conf.value, dataSchema))
+        legacyNcols(readProps(path, conf.value), dataSchema))
     override def commit(end: V2Offset): Unit = ()
     override def stop(): Unit = ()
   }
@@ -4698,7 +4777,9 @@ object KeyedTable {
     * a fully-sorted bucket copies each key once. */
   private final class KResolvingReaderFactory(full: StructType,
       required: StructType, keys: Seq[String], conf: SerConf,
-      legacyNcols: Int, filters: Array[Filter] = Array.empty)
+      legacyNcols: Int, filters: Array[Filter] = Array.empty,
+      // a point read's partition key: only its versions and cuts are kept
+      pointKey: Option[Any] = None)
       extends PartitionReaderFactory {
     override def createReader(
         partition: InputPartition): PartitionReader[InternalRow] = {
@@ -4726,6 +4807,7 @@ object KeyedTable {
       val keyOut = required.fieldNames.map(keys.contains)
       def keyVal(r: InternalRow, i: Int, dt: DataType): Any =
         if (r.isNullAt(i)) null else groupingKey(r.get(i, dt))
+      val point = pointKey.map(groupingKey)
 
       new PartitionReader[InternalRow] {
         private var it: Iterator[InternalRow] = _
@@ -4745,7 +4827,8 @@ object KeyedTable {
               val r = inner.get()
               val s = r.getLong(seqIdx)
               val p = r.getLong(posIdx)
-              if (r.getBoolean(tombIdx)) {
+              if (point.exists(_ != keyVal(r, pkIdx, pkType))) ()
+              else if (r.getBoolean(tombIdx)) {
                 val pk = keyVal(r, pkIdx, pkType)
                 val keep = cuts.get(pk) match {
                   case Some((s0, p0)) => later(s, p, s0, p0)

@@ -89,29 +89,18 @@ class KeyedTableCatalog extends TableCatalog with FunctionCatalog
 
   /** ONE resolution for current and versioned loads — a table property
     * or inferred contract must mean the same thing on both. A table
-    * created by a sink write carries no `_props`: INFER its write
-    * contract from the live manifests (every entry records key +
-    * modulus) so a catalog INSERT INTO clusters like the writes before
-    * it — guessed defaults would mix moduli/keys across commits and
-    * silently break clustered reads forever. */
+    * created by a sink write carries no `_props`: the handle INFERS its
+    * write contract from the live manifests (every entry records key +
+    * modulus, see [[KeyedTable.declaredContract]]) so a catalog INSERT
+    * INTO clusters like the writes before it — guessed defaults would
+    * mix moduli/keys across commits and silently break clustered reads
+    * forever. */
   private def resolve(ident: Identifier, asOfSeq: Option[Long]): Table = {
     val path = ident.name()
-    val conf = KeyedTable.hadoopConf()
-    val schema = KeyedTable.readSchemaFile(path, conf)
+    val schema = KeyedTable.readSchemaFile(path, KeyedTable.hadoopConf())
       .getOrElse(throw new org.apache.spark.sql.catalyst.analysis
         .NoSuchTableException(ident))
-    val props = KeyedTable.readProps(path, conf)
-    val inferred = KeyedTable.inferWriteContract(path, conf)
-    val parts = props.get("writePartitions").map { v =>
-      val n = try v.toInt catch { case _: NumberFormatException =>
-        throw new IllegalArgumentException(
-          s"table property writePartitions='$v' at $path is not an integer") }
-      require(n > 0, s"table property writePartitions=$n at $path must be positive")
-      n
-    }
-    new KeyedTable.KTable(path, schema,
-      keyCol = props.get("key").orElse(inferred.map(_._1)),
-      writePartitions = parts.orElse(inferred.map(_._2)).getOrElse(8),
+    new KeyedTable.KTable(path, schema, keyCol = None, writePartitions = None,
       clusteredRead = true, asOfSeq = asOfSeq)
   }
 

@@ -46,8 +46,7 @@ object KeyedTableOps {
     * the write contract proven by the committed manifests. */
   def tableKey(path: String): Option[String] = {
     val conf = KeyedTable.hadoopConf()
-    KeyedTable.readProps(path, conf).get("key")
-      .orElse(KeyedTable.inferWriteContract(path, conf).map(_._1))
+    KeyedTable.declaredContract(path, conf, KeyedTable.readProps(path, conf))._1
   }
 
   /** The table's FULL primary key — partition key plus any declared
@@ -345,11 +344,16 @@ object KeyedTableOps {
     * holds every file of one write bucket and resolves last-write-wins
     * and tombstones as it reads, like a Cassandra node merging a
     * partition's versions. A point read `latest(...).where(k === v)`
-    * is one Spark job with no Exchange, on the path route as on the
-    * catalog route. The trade-off: a task holds one bucket's live keys
-    * in memory (un-spillable), and a snapshot without a uniform write
-    * contract on the partition key (mixed moduli, unproven files,
-    * files bucketed on another column) resolves in ONE partition.
+    * is one driver-side read while Spark plans it (a DSv2 `LocalScan`)
+    * and runs no Spark job, on the path route as on the catalog route:
+    * key pruning leaves it one read partition (the key's write bucket,
+    * or the single fallback group below), so the driver does the one
+    * task's work and no parallelism is lost. Whole-table and non-key
+    * reads stay distributed. The trade-off: a task holds one bucket's
+    * live keys in memory (un-spillable), and a snapshot without a
+    * uniform write contract on the partition key (mixed moduli,
+    * unproven files, files bucketed on another column) resolves in ONE
+    * partition.
     * Whole-table folds therefore keep [[latestOver]]'s aggregate,
     * which can spill. */
   def latest(spark: SparkSession, path: String): DataFrame = {

@@ -3,13 +3,17 @@ package graft.sources
 import graft.SparkSpecBase
 import graft.pipeline.V2KeyedTableSink
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.{CommandResultExec, LocalTableScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
 
-/** The reader-resolved latest view: a point read is one Spark job with
-  * no Exchange on either route, its rows equal the declarative
-  * last-write-wins aggregate ([[KeyedTableOps.latestOver]]) over the raw
-  * log, keys compare as SQL grouping compares them, and a path read
-  * resolves on the declared key. */
+/** The reader-resolved latest view: a point read is answered on the
+  * driver with no Spark job on either route, its rows equal the
+  * declarative last-write-wins aggregate ([[KeyedTableOps.latestOver]])
+  * over the raw log, keys compare as SQL grouping compares them, and a
+  * path read or write resolves on the declared key. */
 class KeyedTableLatestSpec extends SparkSpecBase {
 
   private def tmpDir(prefix: String): String =
@@ -48,6 +52,19 @@ class KeyedTableLatestSpec extends SparkSpecBase {
   private def delete(t: String, where: String): Unit =
     withCatalog(spark.sql(s"DELETE FROM graft_keyed.`$t` WHERE $where"))
 
+  /** Every physical node, descending through AQE and command wrappers. */
+  private def planNodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+    case q: QueryStageExec => planNodes(q.plan)
+    case c: CommandResultExec => planNodes(c.commandPhysicalPlan)
+    case _ => p +: p.children.flatMap(planNodes)
+  }
+
+  private def scans(df: DataFrame): (Int, Int) = {
+    val ns = planNodes(df.queryExecution.executedPlan)
+    (ns.count(_.isInstanceOf[LocalTableScanExec]), ns.count(_.isInstanceOf[BatchScanExec]))
+  }
+
   private def assertLatestIsLatestOver(t: String, keys: Seq[String]): Seq[String] = {
     val want = rendered(KeyedTableOps.latestOver(log(t), keys))
     assert(want.nonEmpty)
@@ -56,7 +73,7 @@ class KeyedTableLatestSpec extends SparkSpecBase {
     want
   }
 
-  test("a point read through latest runs one Spark job and plans no Exchange") {
+  test("a point read through latest runs no Spark job: one driver-side LocalTableScan") {
     val s = spark
     import s.implicits._
     val t = tmpDir("graft_klatest_job_") + "/t"
@@ -65,10 +82,9 @@ class KeyedTableLatestSpec extends SparkSpecBase {
     sink.append((0L until 40L by 3).map(k => (k, s"b$k")).toDF("k", "s"), t)
     def point = KeyedTableOps.latest(spark, t).where(col("k") === 9L)
     def check(route: String): Unit = {
-      val plan = point.queryExecution.executedPlan
-      assert(graft.ops.PlanChecks.countShuffles(plan) === 0, s"$route: $plan")
+      assert(scans(point) === ((1, 0)), s"$route: ${point.queryExecution.executedPlan}")
       var got = Array.empty[Row]
-      assert(jobsRun { got = point.collect() } === 1, route)
+      assert(jobsRun { got = point.collect() } === 0, route)
       assert(got.map(r => (r.getLong(0), r.getString(1))).toSeq === Seq((9L, "b9")), route)
     }
     onPathRoute(check("path route"))
@@ -183,11 +199,12 @@ class KeyedTableLatestSpec extends SparkSpecBase {
     import s.implicits._
     val t = tmpDir("graft_klatest_contract_") + "/t"
     KeyedTableOps.declareTable(t, "k", 2)
-    // a write without a key option buckets on its first column, v
-    def keyless(v: String): Unit = Seq(v -> 1L).toDF("v", "k")
-      .write.format("graft.sources.KeyedTable").mode("append").save(t)
-    keyless("a")
-    keyless("b")
+    // writes that name another key bucket on it, v
+    def foreign(v: String): Unit = Seq(v -> 1L).toDF("v", "k")
+      .write.format("graft.sources.KeyedTable").option("key", "v")
+      .option("writePartitions", "8").mode("append").save(t)
+    foreign("a")
+    foreign("b")
     val entries = KeyedTable.liveManifests(t, KeyedTable.hadoopConf())
       .flatMap(_.entries)
     assert(entries.map(_.key).toSet === Set("v"))
@@ -196,5 +213,204 @@ class KeyedTableLatestSpec extends SparkSpecBase {
     onPathRoute(assert(rendered(KeyedTableOps.latest(spark, t)) === Seq("b|1"), "path route"))
     withCatalog(assert(rendered(KeyedTableOps.latest(spark, t)) === Seq("b|1"), "catalog route"))
     assert(rendered(KeyedTableOps.latestOver(log(t), Seq("k"))) === Seq("b|1"))
+  }
+
+  test("a keyless path write clusters on the table's declared contract") {
+    val s = spark
+    import s.implicits._
+    val t = tmpDir("graft_klatest_keyless_") + "/t"
+    KeyedTableOps.declareTable(t, "k", 2)
+    V2KeyedTableSink("k", writeParallelism = 2)
+      .append(Seq("a" -> 1L, "c" -> 2L).toDF("v", "k"), t)
+    val conf = KeyedTable.hadoopConf()
+    assert(KeyedTable.inferWriteContract(t, conf) === Some(("k", 2)))
+    Seq("b" -> 1L, "d" -> 3L).toDF("v", "k")
+      .write.format("graft.sources.KeyedTable").mode("append").save(t)
+    val entries = KeyedTable.liveManifests(t, conf).flatMap(_.entries)
+    assert(entries.map(e => (e.key, e.buckets)).distinct === Seq(("k", 2)))
+    assert(KeyedTable.inferWriteContract(t, conf) === Some(("k", 2)))
+    onPathRoute(assert(rendered(KeyedTableOps.latest(spark, t)) === Seq("b|1", "c|2", "d|3")))
+  }
+
+  test("a path point read opens the table's _props twice: latest's key check, then the handle") {
+    val s = spark
+    import s.implicits._
+    val t = tmpDir("graft_klatest_props_") + "/t"
+    KeyedTableOps.declareTable(t, "k", 2)
+    V2KeyedTableSink("k", writeParallelism = 2)
+      .append((0L until 20L).map(k => (k, s"a$k")).toDF("k", "s"), t)
+    val impl = "fs.file.impl"
+    val noCache = "fs.file.impl.disable.cache"
+    spark.conf.set(impl, classOf[OpenCountingFileSystem].getName)
+    spark.conf.set(noCache, "true")
+    try onPathRoute {
+      OpenCountingFileSystem.reset()
+      assert(rendered(KeyedTableOps.latest(spark, t).where(col("k") === 3L)) === Seq("3|a3"))
+      assert(OpenCountingFileSystem.opens("_props") === 2)
+    } finally {
+      spark.conf.unset(impl)
+      spark.conf.unset(noCache)
+    }
+  }
+
+  /** For every key of `raw` plus `extra` probes: the point read
+    * `read().where(pk = v)` is answered on the driver and equals
+    * [[KeyedTableOps.latestOver]]'s resolution of `raw` restricted by
+    * the same predicate (evaluated by Spark over the collected rows). */
+  private def assertPointReads(raw: DataFrame, keys: Seq[String], extra: Seq[Any],
+      read: () => DataFrame): Int = {
+    val pk = keys.head
+    val resolved = KeyedTableOps.latestOver(raw, keys)
+    val want = spark.createDataFrame(
+      java.util.Arrays.asList(resolved.collect(): _*), resolved.schema)
+    val probes = raw.select(pk).distinct().collect().map(_.get(0)).toSeq ++ extra
+    probes.foreach { v =>
+      val got = read().where(col(pk) === lit(v))
+      assert(scans(got) === ((1, 0)), s"$pk = $v: ${got.queryExecution.executedPlan}")
+      assert(rendered(got) === rendered(want.where(col(pk) === lit(v))), s"$pk = $v")
+    }
+    probes.size
+  }
+
+  test("point reads equal latestOver restricted to the key: key types, NaN and -0.0, " +
+      "composite keys, tombstones then re-inserts, asOfSeq, pruned key, residual filter") {
+    val s = spark
+    import s.implicits._
+    val nan = Double.NaN
+    def bothRoutes(t: String, keys: Seq[String], extra: Seq[Any]): Unit = {
+      onPathRoute(assertPointReads(log(t), keys, extra, () => KeyedTableOps.latest(spark, t)))
+      withCatalog(assertPointReads(log(t), keys, extra, () => KeyedTableOps.latest(spark, t)))
+    }
+
+    val single = tmpDir("graft_klatest_pt_long_") + "/t"
+    val sink4 = V2KeyedTableSink("k", writeParallelism = 4)
+    sink4.append((0L until 24L).map(k => (k, s"a$k")).toDF("k", "s"), single)
+    sink4.append((0L until 24L by 3).map(k => (k, s"b$k")).toDF("k", "s"), single)
+    val beforeDelete = KeyedTable.currentSeq(single)
+    delete(single, "k IN (1, 3, 6)")
+    sink4.append(Seq((3L, "c3"), (6L, "c6")).toDF("k", "s"), single)
+    bothRoutes(single, Seq("k"), Seq(99L))
+    // as of a version: the current view at that sequence
+    onPathRoute(assertPointReads(
+      spark.read.format("graft.sources.KeyedTable").option("asOfSeq", beforeDelete).load(single),
+      Seq("k"), Seq(99L),
+      () => spark.read.format("graft.sources.KeyedTable").option("view", "current")
+        .option("asOfSeq", beforeDelete).load(single)))
+    // the key pruned from the projection, and a residual non-key range
+    onPathRoute {
+      val want = KeyedTableOps.latestOver(log(single), Seq("k")).collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toMap
+      (0L until 25L).foreach { k =>
+        val pruned = KeyedTableOps.latest(spark, single).where(col("k") === k).select("s")
+        assert(scans(pruned) === ((1, 0)))
+        assert(pruned.collect().map(_.getString(0)).toSeq === want.get(k).toSeq, s"k = $k")
+        val ranged = KeyedTableOps.latest(spark, single)
+          .where(col("k") === k && col("s") >= "b")
+        assert(scans(ranged) === ((1, 0)))
+        assert(ranged.collect().map(_.getString(1)).toSeq ===
+          want.get(k).filter(_ >= "b").toSeq, s"k = $k")
+      }
+    }
+
+    val composite = tmpDir("graft_klatest_pt_comp_") + "/t"
+    KeyedTableOps.declareTable(composite, "k", 4, Seq("ck"))
+    sink4.append((0L until 40L).map(i => (i % 8, i / 8, s"a$i")).toDF("k", "ck", "s"), composite)
+    delete(composite, "k IN (3, 5)")
+    sink4.append(((0L until 40L by 5).map(i => (i % 8, Option(i / 8), s"b$i")) ++
+      Seq((3L, None, "n3"))).toDF("k", "ck", "s"), composite)
+    bothRoutes(composite, Seq("k", "ck"), Seq(42L))
+
+    val sink2 = V2KeyedTableSink("k", writeParallelism = 2)
+    val floating = tmpDir("graft_klatest_pt_double_") + "/t"
+    sink2.append(Seq(1.0 -> "a", 2.0 -> "a", nan -> "a", -0.0 -> "a", 3.0 -> "a")
+      .toDF("k", "s"), floating)
+    sink2.append(Seq(nan -> "b", 0.0 -> "b", 2.0 -> "b").toDF("k", "s"), floating)
+    delete(floating, "k IN (3.0D, 2.0D)")
+    sink2.append(Seq(3.0 -> "c", -0.0 -> "c").toDF("k", "s"), floating)
+    bothRoutes(floating, Seq("k"), Seq(-0.0, 0.0, nan, 7.5))
+
+    val strings = tmpDir("graft_klatest_pt_string_") + "/t"
+    sink2.append(Seq("a" -> 1L, "" -> 1L, "é" -> 1L, "b" -> 1L).toDF("k", "v"), strings)
+    sink2.append(Seq("a" -> 2L, "é" -> 2L).toDF("k", "v"), strings)
+    delete(strings, "k = 'a'")
+    sink2.append(Seq("a" -> 3L).toDF("k", "v"), strings)
+    bothRoutes(strings, Seq("k"), Seq("zz"))
+
+    val stamps = tmpDir("graft_klatest_pt_ts_") + "/t"
+    def ts(sec: Long) = java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(1700000000L + sec))
+    sink2.append((0L until 6L).map(i => (ts(i), i)).toDF("k", "v"), stamps)
+    sink2.append(Seq((ts(2), 20L), (ts(4), 40L)).toDF("k", "v"), stamps)
+    delete(stamps, s"k = timestamp_seconds(${1700000000L + 4})")
+    bothRoutes(stamps, Seq("k"), Seq(ts(99)))
+  }
+
+  test("whole-table and non-key reads keep the distributed scan") {
+    val s = spark
+    import s.implicits._
+    val t = tmpDir("graft_klatest_batch_") + "/t"
+    V2KeyedTableSink("k", writeParallelism = 4)
+      .append((0L until 40L).map(k => (k, s"a$k")).toDF("k", "s"), t)
+    onPathRoute {
+      val latest = KeyedTableOps.latest(spark, t)
+      assert(scans(latest) === ((0, 1)))
+      assert(scans(latest.where(col("s") === "a9")) === ((0, 1)))
+      assert(scans(latest.where(col("k") > 30L)) === ((0, 1)))
+      assert(latest.where(col("s") === "a9").collect().map(_.getLong(0)).toSeq === Seq(9L))
+    }
+  }
+
+  test("SQL point reads, UPDATE and DELETE on one key read and leave the current state") {
+    val s = spark
+    import s.implicits._
+    val t = tmpDir("graft_klatest_sql_") + "/t"
+    val sink = V2KeyedTableSink("k", writeParallelism = 4)
+    sink.append((0L until 16L).map(k => (k, s"a$k", k)).toDF("k", "s", "c"), t)
+    sink.append((0L until 16L by 2).map(k => (k, s"b$k", k * 10)).toDF("k", "s", "c"), t)
+    delete(t, "k = 4")
+    sink.append(Seq((4L, "r4", 40L)).toDF("k", "s", "c"), t)
+    val ident = s"graft_keyed.`$t`"
+    def state: Map[Long, (String, Long)] = KeyedTableOps.latestOver(log(t), Seq("k")).collect()
+      .map(r => r.getLong(0) -> (r.getString(1), r.getLong(2))).toMap
+    withCatalog {
+      val sql = spark.sql(s"SELECT s, c FROM $ident WITH ('view' = 'current') WHERE k = 4")
+      assert(scans(sql) === ((1, 0)))
+      assert(sql.collect().map(r => (r.getString(0), r.getLong(1))).toSeq === Seq(("r4", 40L)))
+      val before = state
+      val update = spark.sql(s"UPDATE $ident SET s = 'u', c = c + 1 WHERE k = 6")
+      assert(scans(update)._1 === 1, update.queryExecution.executedPlan)
+      spark.sql(s"UPDATE $ident SET s = 'never' WHERE k = 99")
+      val rowLevelDelete = spark.sql(s"DELETE FROM $ident WHERE k = 8 AND s = 'b8'")
+      assert(scans(rowLevelDelete)._1 === 1, rowLevelDelete.queryExecution.executedPlan)
+      spark.sql(s"DELETE FROM $ident WHERE k = 9 AND s = 'no such row'")
+      spark.sql(s"DELETE FROM $ident WHERE k = 10")
+      val want = before - 8L - 10L + (6L -> (("u", 61L)))
+      assert(state === want)
+      assert(KeyedTableOps.latest(spark, t).collect()
+        .map(r => r.getLong(0) -> (r.getString(1), r.getLong(2))).toMap === want)
+    }
+  }
+
+  test("a point read joined to a larger relation still broadcasts the point read") {
+    val s = spark
+    import s.implicits._
+    val t = tmpDir("graft_klatest_join_") + "/t"
+    V2KeyedTableSink("k", writeParallelism = 4)
+      .append((0L until 40L).map(k => (k, s"a$k")).toDF("k", "s"), t)
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    val prior = spark.conf.getOption(threshold)
+    // the point read's pruned file is far below the threshold; the
+    // range (8 bytes per row) is far above it
+    spark.conf.set(threshold, "4096")
+    try onPathRoute {
+      val joined = KeyedTableOps.latest(spark, t).where(col("k") === 9L)
+        .join(spark.range(0, 100000).toDF("k"), "k")
+      val ns = planNodes(joined.queryExecution.executedPlan)
+      assert(ns.exists(_.isInstanceOf[BroadcastHashJoinExec]), joined.queryExecution.executedPlan)
+      assert(ns.count(_.isInstanceOf[LocalTableScanExec]) === 1)
+      assert(rendered(joined) === Seq("9|a9"))
+    } finally prior match {
+      case Some(v) => spark.conf.set(threshold, v)
+      case None => spark.conf.unset(threshold)
+    }
   }
 }

@@ -19,7 +19,9 @@ distance between the base's quartiles. Each --workload gets its own
 pairs and its own table, so one invocation checks a claimed gain and
 the other workloads' "no regression" side together. When a side's
 first run of a workload fails, the script prints that run's output
-tail and stops: the remaining pairs would fail the same way.
+tail and stops: the remaining pairs would fail the same way. --out is
+rewritten after every pair, so a killed or timed-out A/B keeps the
+pairs it finished.
 """
 import argparse
 import json
@@ -73,9 +75,9 @@ def quartiles(xs):
     return med, q1, q3
 
 
-def run_pairs(workload, sides, a):
-    """N alternating pairs of one workload; None when a side's first run failed."""
-    pairs = []
+def run_pairs(workload, sides, a, pairs, saved):
+    """N alternating pairs of one workload, appended to `pairs` with
+    `saved()` called after each; False when a side's first run failed."""
     for i in range(a.pairs):
         order = ["base", "change"] if i % 2 == 0 else ["change", "base"]
         pair = {}
@@ -86,11 +88,21 @@ def run_pairs(workload, sides, a):
                 if not pairs:
                     sys.stderr.write("%s: the %s side's first run failed; stopping\n"
                                      % (workload, s))
-                    return None
+                    return False
         pairs.append(pair)
+        saved()
         print("%s pair %d (%s first): %s" % (workload, i + 1, order[0], json.dumps(pair)),
               flush=True)
-    return pairs
+    return True
+
+
+def save(a, results):
+    """Write every finished pair to --out (replaced whole, never half written)."""
+    if a.out:
+        with open(a.out + ".tmp", "w") as f:
+            json.dump({"seed": a.seed, "seconds": a.seconds, "base": a.base,
+                       "change": a.change, "workloads": results}, f, indent=1)
+        os.replace(a.out + ".tmp", a.out)
 
 
 def report(workload, pairs, bench, a):
@@ -137,13 +149,11 @@ def main():
 
     results = {}
     for w in a.workload:
-        results[w] = run_pairs(w, sides, a)
-        if results[w] is None:
+        results[w] = []
+        if not run_pairs(w, sides, a, results[w], lambda: save(a, results)):
+            results[w] = None
             break
-    if a.out:
-        with open(a.out, "w") as f:
-            json.dump({"seed": a.seed, "seconds": a.seconds, "base": a.base,
-                       "change": a.change, "workloads": results}, f, indent=1)
+    save(a, results)
     reported = [report(w, pairs, bench, a) for w, pairs in results.items() if pairs]
     return 0 if len(reported) == len(a.workload) and all(reported) else 1
 
