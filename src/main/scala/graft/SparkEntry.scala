@@ -22,4 +22,16 @@ object SparkEntry {
     * the same parquet tables. Omitted for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     Catalog.all.flatMap(q => q.oracle.map(o => q.name -> o)).toMap
+
+  /** Mode-sweep hook of Bench and Verify (local iteration; the driver
+    * never sets it): SPARK_GRAFT_SQLCONF="k=v,k=v" builder-level
+    * overrides, e.g. codegen-off / AQE-off sweeps. A segment that is
+    * not key=value fails, so a typo never runs the default config. */
+  def sqlConfOverrides(hook: Option[String]): Seq[(String, String)] =
+    hook.toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty).map { kv =>
+      kv.split("=", 2).map(_.trim) match {
+        case Array(k, v) if k.nonEmpty => k -> v
+        case _ => sys.error(s"SPARK_GRAFT_SQLCONF segment '$kv' is not key=value")
+      }
+    }
 }

@@ -13,16 +13,8 @@ object Verify {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    // flag-run hook (local iteration; the driver never sets this):
-    // SPARK_GRAFT_SQLCONF="k=v,k=v" e.g. codegen-off / AQE-off sweeps
-    sys.env.get("SPARK_GRAFT_SQLCONF").foreach(
-      _.split(",").map(_.trim).filter(_.nonEmpty).foreach { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) => builder.config(k.trim, v.trim)
-          case _ => sys.error(
-            s"SPARK_GRAFT_SQLCONF segment '$kv' is not key=value")
-        }
-      })
+    SparkEntry.sqlConfOverrides(sys.env.get("SPARK_GRAFT_SQLCONF"))
+      .foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // every catalog window is BoundedWindow-fenced or CI-linted; the

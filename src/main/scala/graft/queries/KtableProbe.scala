@@ -52,6 +52,7 @@ object KtableProbe {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val dir = java.nio.file.Files.createTempDirectory("graft_ktprobe_")

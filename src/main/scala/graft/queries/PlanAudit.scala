@@ -47,6 +47,7 @@ object PlanAudit {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // effectful entries RUN a job on fn invocation — same skip contract

@@ -1,7 +1,9 @@
 package graft
 
-import graft.functions.{GraftFunctions, DotProductD}
+import graft.functions.GraftFunctions
 import graft.ops.TextOps
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
 
 /** The codegen'd DotProductD must be BIT-IDENTICAL to the
@@ -52,12 +54,93 @@ class GraftFunctionsSpec extends SparkSpecBase {
   }
 
   test("SQL registration: graft_dot callable from SQL text") {
-    GraftFunctions.register(spark)
+    // no registration call: the session's extension conf injects graft_dot
     Tables.registerAll(spark, sfDir)
     val r = spark.sql(
       "SELECT graft_dot(CAST(embedding AS ARRAY<DOUBLE>), CAST(embedding AS ARRAY<DOUBLE>)) AS d FROM embeddings LIMIT 5")
       .collect()
     assert(r.length === 5 && r.forall(_.getDouble(0) > 0.0))
+  }
+
+  /** Every SQL name GraftExtensions injects. */
+  private val injected = Seq("graft_dot", "graft_h32_array",
+    "graft_h32_array_modp", "graft_intersect_count", "graft_minhash_sig",
+    "graft_rank_by_df", "graft_char_ngrams_3", "graft_materialize",
+    "graft_l2sub_8") ++
+    Seq(8, 16, 32, 64, 128, 256).map(d => s"graft_lvsum_$d") ++
+    Seq(64, 256).map(k => s"graft_kmv_$k") ++
+    Seq(128, 400).map(k => s"graft_kll_$k") ++
+    Seq(16, 64).map(k => s"graft_mg_$k") ++
+    Seq(1, 5, 10, 100).map(k => s"graft_topk_$k") ++
+    Seq(3, 5, 16).flatMap(n =>
+      Seq(s"graft_shingle_hashes_${n}_modp", s"graft_shingle_hashes_${n}_raw"))
+
+  test("every engine function resolves in a new session, SQL == Column helper") {
+    assert(injected.distinct.size === 31)
+    // a fresh session: no helper has run in it, so only the extension
+    // can have registered these names
+    val s = spark.newSession()
+    val reg = s.sessionState.functionRegistry
+    injected.foreach { name =>
+      assert(reg.functionExists(FunctionIdentifier(name)), s"$name not injected")
+      val desc = s.sql(s"DESCRIBE FUNCTION $name").collect().map(_.getString(0))
+      assert(desc.exists(_.startsWith(s"Usage: $name(")),
+        s"$name has no usage:\n${desc.mkString("\n")}")
+    }
+
+    import s.implicits._
+    val rows = (0 until 40).map { i =>
+      val str = Seq(i % 7, i % 3, i % 5, i).map(j => s"w$j").mkString(" ")
+      (i.toLong, str, str.split(" ").toSeq,
+        Seq(i % 4, i % 4 + 3, i + 10).map(_.toLong), // sorted, distinct
+        Seq(3L, 7L, 12L), Seq(5L, 1L, 2L),           // sorted dictionary
+        Seq.tabulate(8)(j => (i * j % 11) / 7.0),
+        Seq.tabulate(8)(j => ((i + j) % 5).toDouble),
+        Seq.tabulate(8)(j => (i * j).toLong), (i * 37 % 41).toDouble)
+    }
+    val t = rows.toDF("id", "str", "toks", "h", "g", "gd", "v", "w", "lv", "d")
+    t.createOrReplaceTempView("fns")
+    import GraftFunctions._
+    // (family, SQL call, Column helper); one function per family
+    val scalar = Seq(
+      ("dot", "graft_dot(v, w)", dot(col("v"), col("w"))),
+      ("h32", "graft_h32_array_modp(toks)", h32Array(col("toks"), TextOps.P)),
+      ("intersect", "graft_intersect_count(h, g)",
+        intersectCountSorted(col("h"), col("g"))),
+      ("minhash", "graft_minhash_sig(h)", minhashSig(col("h"))),
+      ("rank_by_df", "graft_rank_by_df(h, g, gd)",
+        rankByDf(col("h"), col("g"), col("gd"))),
+      ("char n-grams", "graft_char_ngrams_3(str)", charNGrams(col("str"), 3)),
+      ("materialize", "graft_materialize(toks)", materialize(col("toks"))),
+      ("l2sub", "graft_l2sub_8(v, w, 0)", l2sub(col("v"), col("w"), lit(0), 8)),
+      ("shingle", "graft_shingle_hashes_3_modp(toks)",
+        shingleHashes(col("toks"), 3, TextOps.P)))
+    val aggregate = Seq(
+      ("lvsum", "graft_lvsum_8(lv)", longVecSum(col("lv"), 8)),
+      ("kmv", "graft_kmv_64(id)", kmv(col("id"), 64)),
+      ("kll", "graft_kll_128(d)", kll(col("d"), 128)),
+      ("mg", "graft_mg_16(str)", misraGries(col("str"), 16)),
+      ("topk", "graft_topk_5(d, id)", topKPairs(col("d"), col("id"), 5)))
+    scalar.foreach { case (family, sql, helper) =>
+      val viaSql = s.sql(s"SELECT id, $sql FROM fns ORDER BY id").collect().toSeq
+      val viaHelper = t.select(col("id"), helper).orderBy("id").collect().toSeq
+      assert(viaSql === viaHelper, family)
+    }
+    aggregate.foreach { case (family, sql, helper) =>
+      val viaSql = s.sql(s"SELECT $sql FROM fns").collect().toSeq
+      assert(viaSql === t.select(helper).collect().toSeq, family)
+    }
+  }
+
+  test("a helper in a session lacking its function names the extension conf") {
+    val s = spark.newSession()
+    s.sessionState.functionRegistry.dropFunction(FunctionIdentifier("graft_kmv_64"))
+    SparkSession.setActiveSession(s)
+    val e = try intercept[IllegalStateException](GraftFunctions.kmv(col("h"), 64))
+      finally SparkSession.setActiveSession(spark)
+    assert(e.getMessage.contains("graft_kmv_64"))
+    assert(e.getMessage.contains(
+      "spark.sql.extensions=graft.functions.GraftExtensions"))
   }
 
   test("h32Array == per-element md5 builtin formulation, bit-exact") {
