@@ -53,7 +53,7 @@ object Tables {
       // micros precision, identical to DuckDB's epoch_us() view of the
       // same column (sessions run UTC, so the NTZ→TZ cast is wall-clock
       // exact).
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      SessionConf.readNanosAsLong(spark)
       val df = spark.read.parquet(s"$dir/$name.parquet")
       import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
       df.schema("ts").dataType match {

@@ -24,23 +24,21 @@ import org.apache.spark.sql.functions._
   *    cost grows geometrically — but executor-local blocks are lost on
   *    executor death, which on a real cluster mid-loop is fatal: the
   *    lineage needed to recompute them is exactly what was truncated.
-  *    Checkpoint files live on the workspace-grade filesystem and
+  *    Checkpoint files live in the context's checkpoint dir (point
+  *    Spark's `spark.checkpoint.dir` at a shared filesystem) and
   *    survive any executor loss ([[ChaosSpec]] simulates the loss by
   *    dropping every persisted RDD block mid-loop).
   */
 object ConnectedComponents {
 
-  /** Ensure the session has a reliable checkpoint dir. Precedence:
-    * an already-set `sc.setCheckpointDir`, then the
-    * `spark.graft.checkpoint.dir` conf (a pipeline workspace sets this
-    * to its own checkpoint area), then a per-app temp dir. */
+  /** Ensure the session has a reliable checkpoint dir: the
+    * SparkContext's own if one is set (Spark's `spark.checkpoint.dir`
+    * at submit, or an earlier `sc.setCheckpointDir`), else a per-app
+    * temp dir. */
   def ensureCheckpointDir(spark: SparkSession): Unit = synchronized {
-    if (spark.sparkContext.getCheckpointDir.isEmpty) {
-      val dir = spark.conf.getOption("spark.graft.checkpoint.dir")
-        .getOrElse(s"${sys.props("java.io.tmpdir")}/graft-ckpt-" +
-          spark.sparkContext.applicationId)
-      spark.sparkContext.setCheckpointDir(dir)
-    }
+    if (spark.sparkContext.getCheckpointDir.isEmpty)
+      spark.sparkContext.setCheckpointDir(
+        s"${sys.props("java.io.tmpdir")}/graft-ckpt-${spark.sparkContext.applicationId}")
   }
 
   /** Labels every node that appears in `edges` (columns `a`, `b`; must
@@ -67,13 +65,11 @@ object ConnectedComponents {
     // the session's parallelism that is pure task-scheduling overhead
     // (measured 2 s/round over 512 edges at 32 partitions). One
     // partition per ~100k edges, capped at the session setting, keeps
-    // the loop dense at any scale; restored in the finally.
+    // the loop dense at any scale; scoped to the loop.
     val edgeCount = edges.count()
     val sessParts = spark.sessionState.conf.numShufflePartitions
     val loopParts = math.max(1L,
       math.min(sessParts.toLong, (edgeCount + 99999) / 100000)).toInt
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", loopParts)
     // Right-size the loop's SCAN side too (round 20): the caller's
     // edge frame is usually persisted at the SESSION's parallelism
     // (32 fixture-scale cache blocks holding a few hundred rows), so
@@ -84,11 +80,12 @@ object ConnectedComponents {
     // coalesce() (no shuffle) folds the cached blocks into loopParts
     // tasks per read; at cluster scale edgeCount is large, loopParts
     // tracks it, and this is (near-)identity.
+    graft.SessionConf.withConfs(spark,
+        Map("spark.sql.shuffle.partitions" -> Some(loopParts.toString))) {
     val loopEdges =
       if (edges.queryExecution.toRdd.getNumPartitions > loopParts * 2)
         edges.coalesce(loopParts)
       else edges
-    try {
     var labels = loopEdges.select(col("a").as("node")).distinct()
       .select(col("node"), col("node").as("label"))
       .checkpoint()
@@ -137,6 +134,6 @@ object ConnectedComponents {
     require(converged,
       s"connected-components did not converge within $maxIters iterations")
     labels
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
   }
 }

@@ -223,11 +223,6 @@ final class Pipeline(
       spark.sparkContext.hadoopConfiguration, spec.workspace, leaseTtlMs)
     if (!lease.tryAcquire())
       throw new WorkspaceBusyException(spec.workspace, lease.currentHolder())
-    // iterative operators (ops.ConnectedComponents) take their reliable
-    // checkpoint dir from this conf — point it at the workspace so
-    // their state shares the pipeline's fault domain, not /tmp
-    if (spark.conf.getOption("spark.graft.checkpoint.dir").isEmpty)
-      spark.conf.set("spark.graft.checkpoint.dir", s"${spec.workspace}/rdd_checkpoints")
     try spec.tables.foreach { t => runTable(t); lease.renew() }
     finally lease.release()
   }
@@ -249,8 +244,6 @@ final class Pipeline(
       spark.sparkContext.hadoopConfiguration, spec.workspace, leaseTtlMs)
     if (!lease.tryAcquire())
       throw new WorkspaceBusyException(spec.workspace, lease.currentHolder())
-    if (spark.conf.getOption("spark.graft.checkpoint.dir").isEmpty)
-      spark.conf.set("spark.graft.checkpoint.dir", s"${spec.workspace}/rdd_checkpoints")
     try waves(spec.tables).foreach { wave =>
       val pool = java.util.concurrent.Executors
         .newFixedThreadPool(math.min(parallelism, wave.size))

@@ -138,7 +138,7 @@ object GraphQueries {
 
   /** Right-size an iterative build's shuffle parallelism to its edge
     * set (the ops.ConnectedComponents pattern): one partition per
-    * ~100k edges, capped at the session setting, restored afterward.
+    * ~100k edges, capped at the session setting, scoped to the block.
     * Loop rounds materialize eagerly (localCheckpoint(true)) INSIDE
     * the block, so every per-round exchange runs at the loop's
     * parallelism — at fixture scale a round is hundreds of rows and
@@ -152,15 +152,14 @@ object GraphQueries {
     * catalog runner, Verify and Bench are all sequential). Note also
     * that only frames materialized INSIDE the block (the per-round
     * localCheckpoints) run at loop parallelism — a frame merely
-    * CONSTRUCTED here but executed after the finally-restore plans at
+    * CONSTRUCTED here but executed after the scope ends plans at
     * the session setting. */
   private def loopSized[T](s: SparkSession, edgeRows: Long)(f: => T): T = {
     val sess = s.sessionState.conf.numShufflePartitions
     val parts = math.max(1L,
       math.min(sess.toLong, (edgeRows + 99999) / 100000)).toInt
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", parts)
-    try f finally s.conf.set("spark.sql.shuffle.partitions", prev)
+    graft.SessionConf.withConfs(s,
+      Map("spark.sql.shuffle.partitions" -> Some(parts.toString)))(f)
   }
 
   /** Spark twin of [[labelPropCtes]]: returns (bi, e, final labels). */

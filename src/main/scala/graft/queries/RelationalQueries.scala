@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.ops.Relational
+import graft.sources.KeyedTableRegistry.withKeyedCatalog
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -159,15 +160,12 @@ object RelationalQueries {
     dels
   }
 
-  private[queries] def withKeyedCatalog[A](s: SparkSession)(body: => A): A = {
-    val bucketingKey = "spark.sql.sources.v2.bucketing.enabled"
-    val prior = s.conf.getOption(bucketingKey)
-    graft.sources.KeyedTableRegistry.register(s)
-    try body finally prior match {
-      case Some(v) => s.conf.set(bucketingKey, v)
-      case None => s.conf.unset(bucketingKey)
-    }
-  }
+  /** `body` in [[withKeyedCatalog]] with the cost-based optimizer and its
+    * join reordering on. */
+  private def withKeyedCbo[A](s: SparkSession)(body: => A): A =
+    withKeyedCatalog(s)(graft.SessionConf.withConfs(s, Map(
+      "spark.sql.cbo.enabled" -> Some("true"),
+      "spark.sql.cbo.joinReorder.enabled" -> Some("true")))(body))
 
   /** The UPDATE semantics oracle — shared by the native-verb entry
     * (q_ktable_update) and the SQL-statement entry (q_ktable_update_sql)
@@ -1604,35 +1602,26 @@ object RelationalQueries {
             case _ => None
           }.mkString(" ")
         }
-        val cboKeys = Seq("spark.sql.cbo.enabled",
-          "spark.sql.cbo.joinReorder.enabled")
-        val prior = cboKeys.map(k => k -> s.conf.getOption(k))
-        val out = withKeyedCatalog(s) {
-          cboKeys.foreach(s.conf.set(_, "true"))
-          try {
-            def t(p: String) = s.read.table(s"graft_keyed.`$p`")
-            val q1 = t(fact).as("f")
-              .join(t(dimA).as("a"), col("f.ja") === col("a.k"))
-              .join(t(dimB).as("b"), col("f.jb") === col("b.j"))
-            val inner1 = innermostDim(q1)
-            assert(inner1.contains("dim_a") && !inner1.contains("dim_b"),
-              s"CBO must join the selective (unique-key) dim first, " +
-                s"unhinted: $inner1")
-            // flip the roles: join a on the 8-distinct column, b on
-            // the unique key — the order must flip with the NDV
-            val q2 = t(fact).as("f")
-              .join(t(dimB).as("b"), col("f.jb") === col("b.j"))
-              .join(t(dimA).as("a"), col("f.ja") === col("a.k"))
-            val inner2 = innermostDim(q2)
-            assert(inner2.contains("dim_a") && !inner2.contains("dim_b"),
-              s"the join order must follow the NDV, not the written " +
-                s"order: $inner2")
-            q1.agg(count(lit(1)).as("cnt"),
-              sum(col("f.cents")).as("cents_sum")).localCheckpoint(true)
-          } finally prior.foreach {
-            case (k, Some(v)) => s.conf.set(k, v)
-            case (k, None) => s.conf.unset(k)
-          }
+        val out = withKeyedCbo(s) {
+          def t(p: String) = s.read.table(s"graft_keyed.`$p`")
+          val q1 = t(fact).as("f")
+            .join(t(dimA).as("a"), col("f.ja") === col("a.k"))
+            .join(t(dimB).as("b"), col("f.jb") === col("b.j"))
+          val inner1 = innermostDim(q1)
+          assert(inner1.contains("dim_a") && !inner1.contains("dim_b"),
+            s"CBO must join the selective (unique-key) dim first, " +
+              s"unhinted: $inner1")
+          // flip the roles: join a on the 8-distinct column, b on
+          // the unique key — the order must flip with the NDV
+          val q2 = t(fact).as("f")
+            .join(t(dimB).as("b"), col("f.jb") === col("b.j"))
+            .join(t(dimA).as("a"), col("f.ja") === col("a.k"))
+          val inner2 = innermostDim(q2)
+          assert(inner2.contains("dim_a") && !inner2.contains("dim_b"),
+            s"the join order must follow the NDV, not the written " +
+              s"order: $inner2")
+          q1.agg(count(lit(1)).as("cnt"),
+            sum(col("f.cents")).as("cents_sum")).localCheckpoint(true)
         }
         graft.queries.StreamingQueries.deleteRecursively(tmp)
         out
@@ -1685,40 +1674,29 @@ object RelationalQueries {
           col("o_orderkey").as("k"), skew(col("o_orderkey")).as("j")))
         build(dim, Tables(s, d, "customer").select(
           col("c_custkey").as("k"), skew(col("c_custkey")).as("j")))
-        val cboKeys = Seq("spark.sql.cbo.enabled",
-          "spark.sql.cbo.joinReorder.enabled")
-        val prior = cboKeys.map(k => k -> s.conf.getOption(k))
-        val out = withKeyedCatalog(s) {
-          cboKeys.foreach(s.conf.set(_, "true"))
-          try {
-            def t(p: String) = s.read.table(s"graft_keyed.`$p`")
-            def joined() = t(fact).as("f").join(t(dim).as("d"), "j")
-            def estimate(): Long = joined().queryExecution.optimizedPlan
-              .stats.rowCount.map(_.toLong).getOrElse(-1L)
-            // ONE execution of the skewed join serves both the output
-            // row and the estimate-vs-actual lint (round 20: the old
-            // joined().count() + final agg ran the hot-key join twice —
-            // the entry's two most expensive jobs were the same job)
-            val out = joined().agg(count(lit(1)).as("cnt"),
-              sum(col("f.k") + col("d.k")).as("keysum"))
-              .localCheckpoint(true)
-            val actual = out.head.getLong(0)
-            val withHist = estimate()
-            assert(withHist >= actual / 10 && withHist <= actual * 10,
-              s"histogram join estimate $withHist must land within 10x " +
-                s"of actual $actual")
-            s.conf.set("spark.graft.histogram.enabled", "false")
-            val withoutHist =
-              try estimate()
-              finally s.conf.unset("spark.graft.histogram.enabled")
-            assert(withoutHist >= 0 && withoutHist < actual / 10,
-              s"bounds+NDV alone must miss the skew: $withoutHist " +
-                s"vs actual $actual")
-            out
-          } finally prior.foreach {
-            case (k, Some(v)) => s.conf.set(k, v)
-            case (k, None) => s.conf.unset(k)
-          }
+        val out = withKeyedCbo(s) {
+          def t(p: String) = s.read.table(s"graft_keyed.`$p`")
+          def joined() = t(fact).as("f").join(t(dim).as("d"), "j")
+          def estimate(): Long = joined().queryExecution.optimizedPlan
+            .stats.rowCount.map(_.toLong).getOrElse(-1L)
+          // ONE execution of the skewed join serves both the output
+          // row and the estimate-vs-actual lint (round 20: the old
+          // joined().count() + final agg ran the hot-key join twice —
+          // the entry's two most expensive jobs were the same job)
+          val out = joined().agg(count(lit(1)).as("cnt"),
+            sum(col("f.k") + col("d.k")).as("keysum"))
+            .localCheckpoint(true)
+          val actual = out.head.getLong(0)
+          val withHist = estimate()
+          assert(withHist >= actual / 10 && withHist <= actual * 10,
+            s"histogram join estimate $withHist must land within 10x " +
+              s"of actual $actual")
+          val withoutHist = graft.SessionConf.withConfs(s,
+            Map("spark.graft.histogram.enabled" -> Some("false")))(estimate())
+          assert(withoutHist >= 0 && withoutHist < actual / 10,
+            s"bounds+NDV alone must miss the skew: $withoutHist " +
+              s"vs actual $actual")
+          out
         }
         graft.queries.StreamingQueries.deleteRecursively(tmp)
         out

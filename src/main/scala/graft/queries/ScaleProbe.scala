@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Catalog, Tables}
+import graft.{Catalog, SessionConf, Tables}
 import graft.ops.TextOps
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.expressions.Window
@@ -386,16 +386,13 @@ object ScaleProbe {
     // cut it ~8× on the hot key at identical output.
     if (probeEnabled("skew_salted")) {
       val dir = "/root/testdata/sf0.1"
-      val before = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      val beforeCoalesce =
-        spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      // at fixture scale AQE coalesces the whole shuffle into ONE task,
-      // which hides per-reducer skew — at 100 TB partitions are above
-      // the advisory size and coalescing leaves them alone
-      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled",
-        "false")
-      try {
+      // coalescing off: at fixture scale AQE coalesces the whole
+      // shuffle into ONE task, which hides per-reducer skew — at 100 TB
+      // partitions are above the advisory size and coalescing leaves
+      // them alone
+      SessionConf.withConfs(spark, Map(
+          "spark.sql.autoBroadcastJoinThreshold" -> Some("-1"),
+          "spark.sql.adaptive.coalescePartitions.enabled" -> Some("false"))) {
         val ev = Tables(spark, dir, "events")
         val sentinel = when(col("user_id") % 10 === 0, lit(-1L))
           .otherwise(col("user_id"))
@@ -421,10 +418,6 @@ object ScaleProbe {
             s""""max_task_shuffle_records":${tm.maxRecords.get()},""" +
             s""""max_task_shuffle_bytes":${tm.maxBytes.get()},"sec":$secs}""")
         }
-      } finally {
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", before)
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled",
-          beforeCoalesce)
       }
     }
 
@@ -438,11 +431,8 @@ object ScaleProbe {
     // back into one task and hides the spread).
     if (probeEnabled("rank_sharded")) {
       val dir = "/root/testdata/sf0.1"
-      val beforeCoalesce =
-        spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")
-      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled",
-        "false")
-      try {
+      SessionConf.withConfs(spark,
+          Map("spark.sql.adaptive.coalescePartitions.enabled" -> Some("false"))) {
         import org.apache.spark.sql.expressions.Window
         val rows = Tables(spark, dir, "lineitem")
           .select(col("l_orderkey").as("id"),
@@ -470,9 +460,6 @@ object ScaleProbe {
             s""""max_task_shuffle_records":${tm.maxRecords.get()},""" +
             s""""max_task_shuffle_bytes":${tm.maxBytes.get()},"sec":$secs}""")
         }
-      } finally {
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled",
-          beforeCoalesce)
       }
     }
 

@@ -461,7 +461,7 @@ object SimilarityQueries {
         graft.pipeline.V2KeyedTableSink("cell", writeParallelism = 4)
           .append(cdf, cents)
         KeyedTableOps.declareClustering(cents, Seq("dim"))
-        val out = RelationalQueries.withKeyedCatalog(s) {
+        val out = graft.sources.KeyedTableRegistry.withKeyedCatalog(s) {
           // incremental maintenance: the delta wave is a native upsert
           sinkP.append(posed.where(col("vec_id") % 10 === 7), postings)
           // persisted centroids reconstruct bit-exactly

@@ -1264,8 +1264,6 @@ object StreamingQueries {
     // every LATER streaming entry in the session silently inherits
     // RocksDB too, making an entry's provider (and its measured cost)
     // depend on catalog order instead of on the entry.
-    val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
     // NOTE (round-20 A/B, rejected): turning RocksDB changelog
     // checkpointing ON for these runs was measured and REVERTED — at
     // fixture state sizes (KBs/partition) the per-batch changelog file
@@ -1273,16 +1271,11 @@ object StreamingQueries {
     // (sessionize_tws [2.3,2.1,2.0] → [5.1,4.3,2.9] s, topk 1.88 →
     // 2.50 median). The knob's 100 TB rationale lives in CdcStream,
     // whose CDC entries keep it on as the operation under proof.
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    val prevNd = s.conf.get(ndKey)
-    val prevProv = s.conf.get(provKey)
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
-    s.conf.set(ndKey, "true")
-    try f finally {
-      s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.conf.set(ndKey, prevNd)
-      s.conf.set(provKey, prevProv)
-    }
+    val provKey = graft.SessionConf.StateStoreProviderKey
+    graft.SessionConf.withConfs(s, Map(
+      "spark.sql.shuffle.partitions" -> Some(n.toString),
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> Some("true"),
+      provKey -> s.conf.getOption(provKey)))(f)
   }
 
   /** Stage a frame as `n` range-partitioned parquet files with

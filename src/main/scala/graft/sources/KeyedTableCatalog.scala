@@ -281,7 +281,9 @@ class KeyedTableCatalog extends TableCatalog with FunctionCatalog
   * switch (the gate under which reported KeyGroupedPartitioning is
   * honored — and under which the scan plans bucket-grouped partitions
   * instead of per-file ones). Idempotent; callable any time before
-  * the read. */
+  * the read. A declared memo (see [[graft.SessionConf]]): Spark loads
+  * a catalog once per session and keeps it, so its registration is
+  * kept too; [[withKeyedCatalog]] scopes the bucketing switch. */
 object KeyedTableRegistry {
   val CatalogName = "graft_keyed"
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
@@ -289,6 +291,16 @@ object KeyedTableRegistry {
       classOf[KeyedTableCatalog].getName)
     spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
   }
+
+  /** `body` with the catalog registered and v2 bucketing on for `body`
+    * only. */
+  def withKeyedCatalog[A](spark: org.apache.spark.sql.SparkSession)(
+      body: => A): A =
+    graft.SessionConf.withConfs(spark,
+        Map("spark.sql.sources.v2.bucketing.enabled" -> Some("true"))) {
+      register(spark)
+      body
+    }
 }
 
 object KeyedTableCatalog {

@@ -37,31 +37,17 @@ object CdcStream {
     * and the history restart test recovers THROUGH a changelog
     * checkpoint). The previous session setting is restored after `f`. */
   def withChangelogCheckpointing[T](s: org.apache.spark.sql.SparkSession,
-      enabled: Boolean = true)(f: => T): T = {
-    val key = "spark.sql.streaming.stateStore.rocksdb" +
-      ".changelogCheckpointing.enabled"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, enabled.toString)
-    try f finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
+      enabled: Boolean = true)(f: => T): T =
+    graft.SessionConf.withConfs(s, Map("spark.sql.streaming.stateStore" +
+      ".rocksdb.changelogCheckpointing.enabled" -> Some(enabled.toString)))(f)
 
   /** SIDE EFFECT (session-global, by necessity): constructing this
-    * Dataset sets `spark.sql.streaming.stateStore.providerClass` to
-    * RocksDB for the whole session — transformWithState requires that
-    * provider AT QUERY START, which happens after this method returns,
-    * so a scoped set-and-restore here would be unwound before the
-    * start it exists for. Callers that start OTHER streaming queries
-    * later must restore the previous provider themselves; the catalog
-    * harness (withStatePartitions) and the spec suite (afterEach) both
-    * do. */
+    * Dataset selects the RocksDB state store for the whole session
+    * (the declared memo [[graft.SessionConf.useRocksDbStateStore]],
+    * whose doc says why it cannot be scoped). */
   def apply(log: Dataset[CdcRecord]): Dataset[CdcRecord] = {
     import log.sparkSession.implicits._
-    log.sparkSession.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    graft.SessionConf.useRocksDbStateStore(log.sparkSession)
     log.groupByKey(_.k)
       .transformWithState(new CdcProcessor, TimeMode.None(),
         OutputMode.Update())
@@ -88,13 +74,10 @@ object CdcStream {
     * corrupts state; output-side exactly-once is the foreachBatch
     * sink's marker protocol, same as [[apply]].
     *
-    * Same session-global provider SIDE EFFECT as [[apply]] (RocksDB is
-    * required at query start, after construction) — see there. */
+    * Same session-global provider SIDE EFFECT as [[apply]]. */
   def history(log: Dataset[CdcRecord]): Dataset[VersionRow] = {
     import log.sparkSession.implicits._
-    log.sparkSession.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    graft.SessionConf.useRocksDbStateStore(log.sparkSession)
     log.groupByKey(_.k)
       .transformWithState(new CdcHistoryProcessor, TimeMode.None(),
         OutputMode.Update())

@@ -50,7 +50,7 @@ object EventStream {
     * probe reads one footer's ts type and applies it to every file. */
   def readEvents(spark: SparkSession, dir: String,
       options: Map[String, String] = Map.empty): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    graft.SessionConf.readNanosAsLong(spark)
     val tsType =
       try spark.read.parquet(dir).schema("ts").dataType
       catch { case _: org.apache.spark.sql.AnalysisException =>
@@ -355,14 +355,12 @@ object EventStream {
     * timers), the successor to flatMapGroupsWithState: state schema
     * evolves independently per named state variable, and timers are
     * first-class instead of one implicit timeout per key. Requires the
-    * RocksDB state store provider (set by [[sessionizeTws]]).
+    * RocksDB state store provider (selected by [[sessionizeTws]]).
     * Emits byte-identical sessions to [[sessionize]]. */
   def sessionizeTws(events: Dataset[Event], gapMinutes: Int = 30,
       watermark: String = "10 minutes"): Dataset[Session] = {
     import events.sparkSession.implicits._
-    events.sparkSession.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    graft.SessionConf.useRocksDbStateStore(events.sparkSession)
     events.withWatermark("ts", watermark)
       .groupByKey(_.user_id)
       .transformWithState(new SessionProcessor(gapMinutes),
@@ -375,9 +373,7 @@ object EventStream {
     * batch `groupBy(user, type).count()` + rank. */
   def topKEventTypes(events: Dataset[Event], k: Int = 3): Dataset[TypeCount] = {
     import events.sparkSession.implicits._
-    events.sparkSession.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    graft.SessionConf.useRocksDbStateStore(events.sparkSession)
     events.groupByKey(_.user_id)
       .transformWithState(new TopKProcessor(k),
         org.apache.spark.sql.streaming.TimeMode.None(),
@@ -391,9 +387,7 @@ object EventStream {
     * window size and sum. */
   def recentAmounts(events: Dataset[Event], n: Int = 5): Dataset[RecentStat] = {
     import events.sparkSession.implicits._
-    events.sparkSession.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    graft.SessionConf.useRocksDbStateStore(events.sparkSession)
     events.groupByKey(_.user_id)
       .transformWithState(new RecentWindowProcessor(n),
         org.apache.spark.sql.streaming.TimeMode.None(),
@@ -408,9 +402,7 @@ object EventStream {
     * the batch query's Markov matrix incrementally. */
   def transitions(events: Dataset[Event]): Dataset[Transition] = {
     import events.sparkSession.implicits._
-    events.sparkSession.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    graft.SessionConf.useRocksDbStateStore(events.sparkSession)
     events.groupByKey(_.user_id)
       .transformWithState(new TransitionProcessor(),
         org.apache.spark.sql.streaming.TimeMode.None(),

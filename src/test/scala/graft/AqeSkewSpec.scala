@@ -1,5 +1,6 @@
 package graft
 
+import graft.SessionConf.withConfs
 import org.apache.spark.sql.functions._
 
 /** AQE is the engine's runtime answer to skew the planner can't see
@@ -11,19 +12,15 @@ class AqeSkewSpec extends SparkSpecBase {
 
   test("AQE splits a skewed sort-merge join partition at runtime") {
     import spark.implicits._
-    val restore = Seq(
-      "spark.sql.adaptive.enabled" -> spark.conf.getOption("spark.sql.adaptive.enabled"),
-      "spark.sql.autoBroadcastJoinThreshold" ->
-        spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold"))
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ
-    // make the skew detector fire at fixture scale
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "1.2")
-    spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "64KB")
-    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "32KB")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    try {
+    withConfs(spark, Map(
+      "spark.sql.adaptive.enabled" -> Some("true"),
+      "spark.sql.autoBroadcastJoinThreshold" -> Some("-1"), // force SMJ
+      // make the skew detector fire at fixture scale
+      "spark.sql.adaptive.skewJoin.enabled" -> Some("true"),
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> Some("1.2"),
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> Some("64KB"),
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> Some("32KB"),
+      "spark.sql.adaptive.coalescePartitions.enabled" -> Some("false"))) {
       // 100k rows on one hot key + uniform tail vs a small-but-not-
       // broadcast dim; payload pads bytes so the skew threshold trips.
       // NOTE no aggregation above the join: a parent that requires the
@@ -41,9 +38,6 @@ class AqeSkewSpec extends SparkSpecBase {
       val plan = joined.queryExecution.executedPlan.toString
       assert(plan.contains("skew=true"),
         s"AQE should mark the skewed join (skew=true):\n$plan")
-    } finally restore.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 }

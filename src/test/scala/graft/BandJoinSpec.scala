@@ -1,5 +1,6 @@
 package graft
 
+import graft.SessionConf.withConfs
 import graft.plans.BandJoinRewrite
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -27,8 +28,7 @@ class BandJoinSpec extends SparkSpecBase {
       val df = q
       (df.queryExecution.executedPlan.toString, df.collect().toSeq.map(row).sorted)
     }
-    spark.conf.set("spark.graft.bandjoin.enabled", "false")
-    val naive = try run() finally spark.conf.unset("spark.graft.bandjoin.enabled")
+    val naive = withConfs(spark, Map("spark.graft.bandjoin.enabled" -> Some("false")))(run())
     (naive, run())
   }
 

@@ -1,5 +1,6 @@
 package graft
 
+import graft.SessionConf.withConfs
 import org.apache.spark.sql.functions.{col, expr}
 
 /** Pins Catalyst's runtime bloom-filter join pruning: when a shuffle
@@ -14,16 +15,6 @@ import org.apache.spark.sql.functions.{col, expr}
   * engine defaults. */
 class BloomJoinSpec extends SparkSpecBase {
 
-  private def withConf[T](pairs: (String, String)*)(body: => T): T = {
-    val old = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   test("selective dim join injects a bloom might_contain on the fact side") {
     val fact = spark.read.parquet(s"$sfDir/lineitem.parquet")
     val dim = spark.read.parquet(s"$sfDir/orders.parquet")
@@ -32,13 +23,13 @@ class BloomJoinSpec extends SparkSpecBase {
       .select(col("l_orderkey"), col("l_quantity"), col("o_totalprice"))
 
     val expected = join.count()
-    withConf(
-      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
-      "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB",
+    withConfs(spark, Map(
+      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> Some("true"),
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> Some("0"),
+      "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> Some("100MB"),
       // force a shuffle join: a broadcast join already prunes at probe
       // time, so no runtime filter would be injected (correctly)
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      "spark.sql.autoBroadcastJoinThreshold" -> Some("-1"))) {
       val filtered = fact.join(dim, expr("l_orderkey = o_orderkey"))
         .select(col("l_orderkey"), col("l_quantity"), col("o_totalprice"))
       val optimized = filtered.queryExecution.optimizedPlan.toString

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.SessionConf.withConfs
 import graft.SparkSpecBase
 import graft.ops.ConnectedComponents
 import org.apache.spark.sql.functions._
@@ -188,8 +189,7 @@ class ChaosSpec extends SparkSpecBase {
     intercept[Exception](stale.count())
     // strict probe: the verifying count() runs at serve time, fails,
     // and the entry rebuilds from the thunk instead of being served
-    spark.conf.set(FrameCache.strictProbeKey, "true")
-    try {
+    withConfs(spark, Map(FrameCache.strictProbeKey -> Some("true"))) {
       var rebuilt = false
       val recovered = FrameCache.memo(spark, "chaos_strict") {
         rebuilt = true; build(dirB)
@@ -203,26 +203,26 @@ class ChaosSpec extends SparkSpecBase {
           "should have passed")
       }
       assert(served eq recovered)
-    } finally spark.conf.unset(FrameCache.strictProbeKey)
+    }
     FrameCache.clear(spark)
     StreamingQueries.deleteRecursively(base.toString)
   }
 
   test("embedding block count scales with shuffle parallelism") {
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", "32")
+    def atParts[A](n: String)(body: => A): A =
+      withConfs(spark, Map("spark.sql.shuffle.partitions" -> Some(n)))(body)
+    atParts("32") {
       assert(DedupQueries.embeddingBlocks(spark) == 8) // 8*9/2 = 36 >= 32
-      spark.conf.set("spark.sql.shuffle.partitions", "2000")
+    }
+    atParts("2000") {
       assert(DedupQueries.embeddingBlocks(spark) == 63) // 63*64/2 = 2016
-      spark.conf.set("spark.sql.shuffle.partitions", "1")
+    }
+    atParts("1") {
       assert(DedupQueries.embeddingBlocks(spark) == 2) // floor of 2
       // explicit override wins regardless of parallelism
-      spark.conf.set("spark.graft.dedup.embedding.blocks", "5")
-      assert(DedupQueries.embeddingBlocks(spark) == 5)
-    } finally {
-      spark.conf.unset("spark.graft.dedup.embedding.blocks")
-      spark.conf.set("spark.sql.shuffle.partitions", before)
+      withConfs(spark, Map("spark.graft.dedup.embedding.blocks" -> Some("5"))) {
+        assert(DedupQueries.embeddingBlocks(spark) == 5)
+      }
     }
   }
 }

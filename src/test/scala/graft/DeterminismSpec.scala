@@ -1,5 +1,7 @@
 package graft
 
+import graft.SessionConf.withConfs
+
 /** Partition-layout invariance: the engine's central reproducibility
   * claim is that every catalog result is a pure function of the DATA —
   * not of partition count, task scheduling, or merge order. The
@@ -58,18 +60,14 @@ class DeterminismSpec extends SparkSpecBase {
 
   for (q <- queries)
     test(s"$q is invariant to shuffle partition count") {
-      val before = spark.conf.get("spark.sql.shuffle.partitions")
+      def canonAt(parts: String) =
+        withConfs(spark, Map("spark.sql.shuffle.partitions" -> Some(parts)))(canon(q))
       try {
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        val a = canon(q)
+        val a = canonAt("4")
         spark.catalog.clearCache()
-        spark.conf.set("spark.sql.shuffle.partitions", "7")
-        val b = canon(q)
+        val b = canonAt("7")
         assert(a.nonEmpty)
         assert(a === b, s"$q changed results across partition layouts")
-      } finally {
-        spark.conf.set("spark.sql.shuffle.partitions", before)
-        spark.catalog.clearCache()
-      }
+      } finally spark.catalog.clearCache()
     }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.SessionConf.withConfs
 import graft.ops.Relational
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
@@ -67,7 +68,6 @@ class FormatSpec extends SparkSpecBase {
   }
 
   test("bucketed join on the bucket key plans with no shuffle exchange") {
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ path
     // pre-clean: a crashed earlier JVM can leave the managed-table
     // LOCATION on disk with no metastore entry — CTAS then fails with
     // LOCATION_ALREADY_EXISTS even after DROP TABLE IF EXISTS
@@ -78,7 +78,8 @@ class FormatSpec extends SparkSpecBase {
       }
       rm(new java.io.File(s"spark-warehouse/$t"))
     }
-    try {
+    // force SMJ path
+    try withConfs(spark, Map("spark.sql.autoBroadcastJoinThreshold" -> Some("-1"))) {
       Relational.sinkBucketed(
         Tables(spark, sfDir, "orders"), "orders_b", "o_custkey", 4, Some("o_custkey"))
       Relational.sinkBucketed(
@@ -99,7 +100,6 @@ class FormatSpec extends SparkSpecBase {
         .queryExecution.executedPlan.toString
       assert(plan2.contains("Exchange"), "unbucketed baseline should shuffle")
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
       spark.sql("DROP TABLE IF EXISTS orders_b")
       spark.sql("DROP TABLE IF EXISTS customer_b")
     }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.SessionConf.withConfs
 import graft.sources.{KeyedTableOps, KeyedTableRegistry}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -19,13 +20,8 @@ class HistogramStatsSpec extends SparkSpecBase {
 
   private def withCbo[A](body: => A): A = {
     KeyedTableRegistry.register(spark)
-    val keys = Seq("spark.sql.cbo.enabled", "spark.sql.cbo.joinReorder.enabled")
-    val prior = keys.map(k => k -> spark.conf.getOption(k))
-    keys.foreach(spark.conf.set(_, "true"))
-    try body finally prior.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
+    withConfs(spark, Map("spark.sql.cbo.enabled" -> Some("true"),
+      "spark.sql.cbo.joinReorder.enabled" -> Some("true")))(body)
   }
 
   private def table(t: String): DataFrame =
@@ -89,12 +85,11 @@ class HistogramStatsSpec extends SparkSpecBase {
       val withHist = estimate()
       assert(withHist >= actual / 8 && withHist <= actual * 8,
         s"histogram join estimate $withHist vs actual $actual")
-      spark.conf.set("spark.graft.histogram.enabled", "false")
-      try {
+      withConfs(spark, Map("spark.graft.histogram.enabled" -> Some("false"))) {
         val withoutHist = estimate()
         assert(withoutHist >= 0 && withoutHist < actual / 50,
           s"bounds+NDV alone must miss the skew: $withoutHist vs $actual")
-      } finally spark.conf.unset("spark.graft.histogram.enabled")
+      }
     }
   }
 }

@@ -26,15 +26,8 @@ class KeyedTableLwwSpec extends SparkSpecBase {
 
   private def sink = V2KeyedTableSink("k", writeParallelism = 4)
 
-  private def withCatalog[A](body: => A): A = {
-    val bucketingKey = "spark.sql.sources.v2.bucketing.enabled"
-    val prior = spark.conf.getOption(bucketingKey)
-    KeyedTableRegistry.register(spark)
-    try body finally prior match {
-      case Some(v) => spark.conf.set(bucketingKey, v)
-      case None => spark.conf.unset(bucketingKey)
-    }
-  }
+  private def withCatalog[A](body: => A): A =
+    KeyedTableRegistry.withKeyedCatalog(spark)(body)
 
   test("metadata columns expose the commit order") {
     val t = tmpDir("graft_klww_meta_") + "/t"

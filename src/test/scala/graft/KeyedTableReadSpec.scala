@@ -1,5 +1,6 @@
 package graft
 
+import graft.SessionConf.withConfs
 import graft.pipeline.V2KeyedTableSink
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
@@ -152,10 +153,7 @@ class KeyedTableReadSpec extends SparkSpecBase {
   }
 
   test("clustered read through the catalog: key-grouped aggregate plans no exchange") {
-    val keep = Seq("spark.sql.sources.v2.bucketing.enabled")
-      .map(k => k -> spark.conf.getOption(k))
-    try {
-      graft.sources.KeyedTableRegistry.register(spark)
+    graft.sources.KeyedTableRegistry.withKeyedCatalog(spark) {
       val t = tmpDir("graft_kclust_") + "/t"
       val sink = V2KeyedTableSink("k", writeParallelism = 4)
       sink.append(rows(0, 100), t)
@@ -183,13 +181,9 @@ class KeyedTableReadSpec extends SparkSpecBase {
 
       // with v2 bucketing off, per-file parallelism is kept (8 files,
       // not 4 bucket groups)
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "false")
-      val flat = spark.table(s"graft_keyed.`$t`")
-      assert(scanOf(flat.select(col("k"))).inputRDD.getNumPartitions === 8)
-    } finally {
-      keep.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
+      withConfs(spark, Map("spark.sql.sources.v2.bucketing.enabled" -> Some("false"))) {
+        val flat = spark.table(s"graft_keyed.`$t`")
+        assert(scanOf(flat.select(col("k"))).inputRDD.getNumPartitions === 8)
       }
     }
   }
@@ -396,10 +390,7 @@ class KeyedTableReadSpec extends SparkSpecBase {
   }
 
   test("storage-partitioned join: two keyed tables join with zero shuffle") {
-    val keep = Seq("spark.sql.sources.v2.bucketing.enabled")
-      .map(k => k -> spark.conf.getOption(k))
-    try {
-      graft.sources.KeyedTableRegistry.register(spark)
+    graft.sources.KeyedTableRegistry.withKeyedCatalog(spark) {
       val base = tmpDir("graft_kspj_")
       val left = s"$base/left"
       val right = s"$base/right"
@@ -420,21 +411,13 @@ class KeyedTableReadSpec extends SparkSpecBase {
       val plain = readBack(left).join(readBack(right), Seq("k"))
         .groupBy(col("k")).agg(count(lit(1)).as("n"))
       assert(joined.exceptAll(plain).isEmpty && plain.exceptAll(joined).isEmpty)
-    } finally {
-      keep.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
     }
   }
 
   test("SQL surface through the catalog: CREATE TABLE, INSERT INTO, SELECT, DROP") {
     // register flips the session's v2-bucketing conf: scope it like
     // the sibling tests so no later suite inherits a plan change
-    val keep = Seq("spark.sql.sources.v2.bucketing.enabled")
-      .map(k => k -> spark.conf.getOption(k))
-    try {
-    graft.sources.KeyedTableRegistry.register(spark)
+    graft.sources.KeyedTableRegistry.withKeyedCatalog(spark) {
     val t = tmpDir("graft_ksql_") + "/t"
     spark.sql(s"""CREATE TABLE graft_keyed.`$t` (k BIGINT, s STRING, c BIGINT)
       |TBLPROPERTIES ('key'='k', 'writePartitions'='4')""".stripMargin)
@@ -459,19 +442,11 @@ class KeyedTableReadSpec extends SparkSpecBase {
     spark.sql(s"DROP TABLE graft_keyed.`$t`")
     assert(!new java.io.File(t).exists(), "DROP TABLE left the directory")
     intercept[Exception] { spark.sql(s"SELECT * FROM graft_keyed.`$t`") }
-    } finally {
-      keep.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
     }
   }
 
   test("catalog INSERT INTO a sink-created table infers the original write contract") {
-    val keep = Seq("spark.sql.sources.v2.bucketing.enabled")
-      .map(k => k -> spark.conf.getOption(k))
-    try {
-      graft.sources.KeyedTableRegistry.register(spark)
+    graft.sources.KeyedTableRegistry.withKeyedCatalog(spark) {
       val t = tmpDir("graft_kinfer_") + "/t"
       // sink-created: no _props file — the catalog must infer
       // (key=k, modulus=4) from the committed manifests, NOT guess
@@ -493,11 +468,6 @@ class KeyedTableReadSpec extends SparkSpecBase {
           spark.sql(s"CREATE TABLE graft_keyed.`${tmpDir("graft_kbad_")}/t` " +
             s"(k BIGINT) TBLPROPERTIES ('writePartitions'='$bad')")
         }
-      }
-    } finally {
-      keep.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
       }
     }
   }

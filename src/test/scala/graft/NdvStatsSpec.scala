@@ -1,5 +1,6 @@
 package graft
 
+import graft.SessionConf.withConfs
 import graft.pipeline.V2KeyedTableSink
 import graft.sources.KeyedTableRegistry
 import org.apache.spark.sql.DataFrame
@@ -16,13 +17,8 @@ class NdvStatsSpec extends SparkSpecBase {
 
   private def withCbo[A](body: => A): A = {
     KeyedTableRegistry.register(spark)
-    val keys = Seq("spark.sql.cbo.enabled", "spark.sql.cbo.joinReorder.enabled")
-    val prior = keys.map(k => k -> spark.conf.getOption(k))
-    keys.foreach(spark.conf.set(_, "true"))
-    try body finally prior.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
+    withConfs(spark, Map("spark.sql.cbo.enabled" -> Some("true"),
+      "spark.sql.cbo.joinReorder.enabled" -> Some("true")))(body)
   }
 
   private def table(t: String): DataFrame =

@@ -1,5 +1,6 @@
 package graft
 
+import graft.SessionConf.withConfs
 import graft.ops.Relational
 import graft.pipeline._
 import graft.queries.PipelineQueries
@@ -389,15 +390,14 @@ class PipelineSpec extends SparkSpecBase {
       .filter(_.startsWith("graft_raw_"))
     assert(tables.exists(_.startsWith("graft_raw_lineitem_")))
     assert(tables.exists(_.startsWith("graft_raw_orders_")))
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConfs(spark, Map("spark.sql.autoBroadcastJoinThreshold" -> Some("-1"))) {
       val li = spark.table(tables.find(_.startsWith("graft_raw_lineitem_")).get)
       val o = spark.table(tables.find(_.startsWith("graft_raw_orders_")).get)
       val plan = li.join(o, li("l_orderkey") === o("o_orderkey"))
         .queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange hashpartitioning"),
         s"bucketed staging should make the join exchange-free:\n$plan")
-    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    }
 
     // resume: a second run skips extract (tables exist) and re-delivers
     // nothing new (checkpoints hold)

@@ -757,9 +757,8 @@ class PlanGuardSpec extends SparkSpecBase {
     // (transformWithState requires it at query START) — restore it so
     // the shared test session's later streaming tests keep running on
     // the default provider, same hygiene as withStatePartitions
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = spark.conf.get(provKey)
-    try {
+    val provKey = SessionConf.StateStoreProviderKey
+    SessionConf.withConfs(spark, Map(provKey -> spark.conf.getOption(provKey))) {
       Seq[(String, org.apache.spark.sql.Dataset[_])](
         "apply" -> CdcStream(MemoryStream[CdcStream.CdcRecord].toDS()),
         "history" -> CdcStream.history(MemoryStream[CdcStream.CdcRecord].toDS())
@@ -770,6 +769,6 @@ class PlanGuardSpec extends SparkSpecBase {
         assert(tws.forall(_.groupingAttributes.nonEmpty),
           s"CDC $name state is not key-partitioned")
       }
-    } finally spark.conf.set(provKey, prevProv)
+    }
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.SessionConf.withConfs
 import graft.queries.RelationalQueries
 import org.apache.spark.sql.functions._
 
@@ -352,8 +353,7 @@ class PlanShapeSpec extends SparkSpecBase {
     // plan even at spec scale): no WindowExec sorts the whole
     // customer/user frame in one task — unpartitioned windows consume
     // only the bounded per-shard count aggregate
-    spark.conf.set(graft.ops.ShardedRank.ThresholdConf, "0")
-    try {
+    withConfs(spark, Map(graft.ops.ShardedRank.ThresholdConf -> Some("0"))) {
       for (name <- Seq("q_window_ntile", "q_events_rfm")) {
         val df = Catalog.byName(name).fn(spark, sfDir)
         df.collect()
@@ -369,7 +369,7 @@ class PlanShapeSpec extends SparkSpecBase {
             s"$name: unpartitioned window must consume shard aggregates:\n$w")
         }
       }
-    } finally spark.conf.unset(graft.ops.ShardedRank.ThresholdConf)
+    }
   }
 
   test("ntile + rfm small-frame path: no joins, bounded marker folds away") {

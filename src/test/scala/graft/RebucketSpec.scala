@@ -20,15 +20,8 @@ class RebucketSpec extends SparkSpecBase {
     (lo until hi).map(k => (k, s"$tag$k", k * 10L)).toDF("k", "s", "c")
   }
 
-  private def withCatalog[A](body: => A): A = {
-    val bucketingKey = "spark.sql.sources.v2.bucketing.enabled"
-    val prior = spark.conf.getOption(bucketingKey)
-    KeyedTableRegistry.register(spark)
-    try body finally prior match {
-      case Some(v) => spark.conf.set(bucketingKey, v)
-      case None => spark.conf.unset(bucketingKey)
-    }
-  }
+  private def withCatalog[A](body: => A): A =
+    KeyedTableRegistry.withKeyedCatalog(spark)(body)
 
   private def scanPartitions(df: DataFrame): Int = {
     val ns = df.queryExecution.executedPlan.collect {

@@ -277,16 +277,10 @@ class ReferenceJobSpec extends SparkSpecBase {
     // and the Cassandra verbs work on the config-created table:
     // DELETE one customer partition, every order of it disappears
     val victim = expected.select("custkey").head().getLong(0)
-    val bucketingKey = "spark.sql.sources.v2.bucketing.enabled"
-    val prior = spark.conf.getOption(bucketingKey)
-    graft.sources.KeyedTableRegistry.register(spark)
-    try {
+    graft.sources.KeyedTableRegistry.withKeyedCatalog(spark) {
       spark.sql(s"DELETE FROM graft_keyed.`$target` WHERE custkey = $victim")
       assert(graft.sources.KeyedTableOps.latest(spark, target)
         .where(col("custkey") === victim).count() === 0)
-    } finally prior match {
-      case Some(v) => spark.conf.set(bucketingKey, v)
-      case None => spark.conf.unset(bucketingKey)
     }
   }
 

@@ -23,15 +23,8 @@ class RowLevelModelSpec extends SparkSpecBase {
   private def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
-  private def withCatalog[A](body: => A): A = {
-    val bucketingKey = "spark.sql.sources.v2.bucketing.enabled"
-    val prior = spark.conf.getOption(bucketingKey)
-    KeyedTableRegistry.register(spark)
-    try body finally prior match {
-      case Some(v) => spark.conf.set(bucketingKey, v)
-      case None => spark.conf.unset(bucketingKey)
-    }
-  }
+  private def withCatalog[A](body: => A): A =
+    KeyedTableRegistry.withKeyedCatalog(spark)(body)
 
   private def tableState(t: String): Map[Long, (String, Long)] =
     KeyedTableOps.latestOver(

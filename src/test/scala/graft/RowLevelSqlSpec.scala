@@ -1,5 +1,6 @@
 package graft
 
+import graft.SessionConf.withConfs
 import graft.pipeline.V2KeyedTableSink
 import graft.sources.{KeyedTable, KeyedTableOps, KeyedTableRegistry}
 import org.apache.spark.sql.DataFrame
@@ -25,15 +26,8 @@ class RowLevelSqlSpec extends SparkSpecBase {
 
   private def sink = V2KeyedTableSink("k", writeParallelism = 4)
 
-  private def withCatalog[A](body: => A): A = {
-    val bucketingKey = "spark.sql.sources.v2.bucketing.enabled"
-    val prior = spark.conf.getOption(bucketingKey)
-    KeyedTableRegistry.register(spark)
-    try body finally prior match {
-      case Some(v) => spark.conf.set(bucketingKey, v)
-      case None => spark.conf.unset(bucketingKey)
-    }
-  }
+  private def withCatalog[A](body: => A): A =
+    KeyedTableRegistry.withKeyedCatalog(spark)(body)
 
   private def ident(t: String): String = s"graft_keyed.`$t`"
 
@@ -493,8 +487,7 @@ class RowLevelSqlSpec extends SparkSpecBase {
     val t = tmpDir("graft_rlo_occ_off_") + "/t"
     sink.append(rows(0, 10, "a"), t)
     withCatalog {
-      spark.conf.set("spark.graft.rowlevel.conflicts", "off")
-      try {
+      withConfs(spark, Map("spark.graft.rowlevel.conflicts" -> Some("off"))) {
         val failure = interleave(mergeSql(t, 0, 5)) {
           spark.sql(s"UPDATE ${ident(t)} SET c = c + 1000 WHERE k < 5")
         }
@@ -505,7 +498,7 @@ class RowLevelSqlSpec extends SparkSpecBase {
         val got = state(t)
         (0L until 5L).foreach(k => assert(got(k) === ((s"m$k", k * 7)),
           s"LWW must hand key $k to the last committer, got ${got(k)}"))
-      } finally spark.conf.unset("spark.graft.rowlevel.conflicts")
+      }
     }
   }
 

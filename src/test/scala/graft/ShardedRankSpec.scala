@@ -1,5 +1,6 @@
 package graft
 
+import graft.SessionConf.withConfs
 import graft.ops.ShardedRank
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -76,8 +77,7 @@ class ShardedRankSpec extends SparkSpecBase {
         .cast("bigint"))
       .select(col("id"), col("rn"))
     for (thr <- Seq("0", "1000000")) { // force sharded, then plain
-      spark.conf.set(ShardedRank.ThresholdConf, thr)
-      try {
+      withConfs(spark, Map(ShardedRank.ThresholdConf -> Some(thr))) {
         val (ranked, n) = ShardedRank.rowNumberAdaptive(df,
           Seq(col("level"), expr("id DIV 64")), Seq(true, false),
           Seq(col("level").desc, col("id").asc), "rn")
@@ -85,7 +85,7 @@ class ShardedRankSpec extends SparkSpecBase {
         val got = ranked.select(col("id"), col("rn"))
         assert(got.except(expected).isEmpty && expected.except(got).isEmpty,
           s"threshold=$thr")
-      } finally spark.conf.unset(ShardedRank.ThresholdConf)
+      }
     }
   }
 

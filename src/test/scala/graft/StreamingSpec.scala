@@ -11,21 +11,18 @@ import java.sql.Timestamp
   * agg, keyed dedup, and watermark-driven sessionization (no DuckDB
   * oracle exists for stateful streaming — deterministic micro-batch
   * tests instead, SURVEY.md §7.4). */
-class StreamingSpec extends SparkSpecBase
-    with org.scalatest.BeforeAndAfterEach {
+class StreamingSpec extends SparkSpecBase {
   import spark.implicits._
   private implicit def sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
   // nine tests here start transformWithState machines whose builders
   // set the RocksDB state-store provider session-globally (required
-  // at query START) — reset to the pre-suite default after EVERY test
-  // so no later test silently runs on a leaked provider
-  private val provKey = "spark.sql.streaming.stateStore.providerClass"
-  private lazy val defaultProv = spark.conf.get(provKey)
-  override def beforeEach(): Unit = { defaultProv; super.beforeEach() }
-  override def afterEach(): Unit = {
-    spark.conf.set(provKey, defaultProv)
-    super.afterEach()
+  // at query START) — EVERY test runs in a scope that restores it, so
+  // no later test silently runs on a leaked provider
+  override def withFixture(test: NoArgTest) = {
+    val provKey = SessionConf.StateStoreProviderKey
+    SessionConf.withConfs(spark, Map(provKey -> spark.conf.getOption(provKey)))(
+      super.withFixture(test))
   }
 
   /** Await with a CHECKED timeout: on expiry stop the query and fail
@@ -92,7 +89,7 @@ class StreamingSpec extends SparkSpecBase
     val out = base.resolve("out").toString
     val cp = base.resolve("cp").toString
     // raw read keeps ts as long nanos — matches EventStream.rawSchema
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    SessionConf.readNanosAsLong(spark)
     val raw = spark.read.parquet(s"$sfDir/events.parquet")
     def runOnce(): Unit = {
       val q = EventStream.dedupe(EventStream.readEvents(spark, in))
@@ -499,7 +496,7 @@ class StreamingSpec extends SparkSpecBase
   test("file source honors maxFilesPerTrigger (bounded per-batch ingestion)") {
     val base = java.nio.file.Files.createTempDirectory("graft_mfpt_")
     val in = base.resolve("in").toString
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    SessionConf.readNanosAsLong(spark)
     val raw = spark.read.parquet(s"$sfDir/events.parquet")
     // four separate files arriving "at once"
     (0 until 4).foreach { i =>

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.SessionConf.withConfs
 import graft.SparkSpecBase
 import graft.pipeline.V2KeyedTableSink
 import org.apache.spark.sql.{DataFrame, Row}
@@ -28,21 +29,11 @@ class KeyedTableLatestSpec extends SparkSpecBase {
   private val catalogConf = s"spark.sql.catalog.${KeyedTableRegistry.CatalogName}"
 
   /** `body` with the keyed catalog unregistered: reads take the path route. */
-  private def onPathRoute[A](body: => A): A = {
-    val prior = spark.conf.getOption(catalogConf)
-    spark.conf.unset(catalogConf)
-    try body finally prior.foreach(spark.conf.set(catalogConf, _))
-  }
+  private def onPathRoute[A](body: => A): A =
+    withConfs(spark, Map(catalogConf -> None))(body)
 
-  private def withCatalog[A](body: => A): A = {
-    val bucketingKey = "spark.sql.sources.v2.bucketing.enabled"
-    val prior = spark.conf.getOption(bucketingKey)
-    KeyedTableRegistry.register(spark)
-    try body finally prior match {
-      case Some(v) => spark.conf.set(bucketingKey, v)
-      case None => spark.conf.unset(bucketingKey)
-    }
-  }
+  private def withCatalog[A](body: => A): A =
+    KeyedTableRegistry.withKeyedCatalog(spark)(body)
 
   /** Rows as exact strings, sorted: -0.0 renders apart from 0.0, and a
     * key resolved twice shows as a second row. */
@@ -239,18 +230,13 @@ class KeyedTableLatestSpec extends SparkSpecBase {
     KeyedTableOps.declareTable(t, "k", 2)
     V2KeyedTableSink("k", writeParallelism = 2)
       .append((0L until 20L).map(k => (k, s"a$k")).toDF("k", "s"), t)
-    val impl = "fs.file.impl"
-    val noCache = "fs.file.impl.disable.cache"
-    spark.conf.set(impl, classOf[OpenCountingFileSystem].getName)
-    spark.conf.set(noCache, "true")
-    try onPathRoute {
+    withConfs(spark, Map(
+        "fs.file.impl" -> Some(classOf[OpenCountingFileSystem].getName),
+        "fs.file.impl.disable.cache" -> Some("true")))(onPathRoute {
       OpenCountingFileSystem.reset()
       assert(rendered(KeyedTableOps.latest(spark, t).where(col("k") === 3L)) === Seq("3|a3"))
       assert(OpenCountingFileSystem.opens("_props") === 2)
-    } finally {
-      spark.conf.unset(impl)
-      spark.conf.unset(noCache)
-    }
+    })
   }
 
   /** For every key of `raw` plus `extra` probes: the point read
@@ -396,21 +382,15 @@ class KeyedTableLatestSpec extends SparkSpecBase {
     val t = tmpDir("graft_klatest_join_") + "/t"
     V2KeyedTableSink("k", writeParallelism = 4)
       .append((0L until 40L).map(k => (k, s"a$k")).toDF("k", "s"), t)
-    val threshold = "spark.sql.autoBroadcastJoinThreshold"
-    val prior = spark.conf.getOption(threshold)
     // the point read's pruned file is far below the threshold; the
     // range (8 bytes per row) is far above it
-    spark.conf.set(threshold, "4096")
-    try onPathRoute {
+    withConfs(spark, Map("spark.sql.autoBroadcastJoinThreshold" -> Some("4096")))(onPathRoute {
       val joined = KeyedTableOps.latest(spark, t).where(col("k") === 9L)
         .join(spark.range(0, 100000).toDF("k"), "k")
       val ns = planNodes(joined.queryExecution.executedPlan)
       assert(ns.exists(_.isInstanceOf[BroadcastHashJoinExec]), joined.queryExecution.executedPlan)
       assert(ns.count(_.isInstanceOf[LocalTableScanExec]) === 1)
       assert(rendered(joined) === Seq("9|a9"))
-    } finally prior match {
-      case Some(v) => spark.conf.set(threshold, v)
-      case None => spark.conf.unset(threshold)
-    }
+    })
   }
 }
