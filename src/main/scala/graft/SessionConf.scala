@@ -6,7 +6,9 @@ import org.apache.spark.sql.SparkSession
   * ([[withConfs]]: set, run, restore) or is a declared memo that must
   * outlive the call that makes it, with the reason at its helper. The
   * memos are the two below and `sources.KeyedTableRegistry.register`
-  * (a catalog registration, kept for the session like any catalog).
+  * (a catalog registration alone, kept for the session like any
+  * catalog; the v2-bucketing switch its reads want is scoped by
+  * `withKeyedCatalog`).
   * `SessionConfGuardSpec` fails on a write anywhere else in `src/main`. */
 object SessionConf {
 

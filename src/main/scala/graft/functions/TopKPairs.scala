@@ -17,8 +17,10 @@ import org.apache.spark.sql.types._
   * change any oracle-checked result.
   *
   * Scale rationale: the `row_number() OVER (PARTITION BY query ORDER BY
-  * score DESC)` formulation shuffles and sorts EVERY scored pair
-  * (n_candidates × n_queries rows) only to discard all but k per query.
+  * score DESC)` formulation sorts EVERY scored pair (n_candidates ×
+  * n_queries rows) only to discard all but k per query (Spark's
+  * `WindowGroupLimit` cuts each sorted partition to k before the
+  * shuffle, so the sort is the cost).
   * This aggregate keeps a k-entry buffer per group, combines map-side,
   * and ships k·16 bytes per (partition, query) through the shuffle —
   * the same partial/final contract as any sum. k is a registered
@@ -73,7 +75,7 @@ final case class TopKPairsAgg(
       if (buf.size() < k) add(buf, (sv, iv))
       else {
         val w = buf.first()
-        val c = java.lang.Double.compare(sv, w._1)
+        val c = TopKPairsAgg.compareScores(sv, w._1)
         if (c > 0 || (c == 0 && iv < w._2)) add(buf, (sv, iv))
       }
     }
@@ -131,14 +133,20 @@ final case class TopKPairsAgg(
 }
 
 object TopKPairsAgg {
+  /** Scores ordered as Spark's sort orders doubles: `0.0` and `-0.0`
+    * are equal (java.lang.Double.compare alone ranks `0.0` higher, so
+    * the id tie-break would never be reached), NaN equals NaN and is
+    * above every other value. */
+  private[functions] def compareScores(x: Double, y: Double): Int =
+    if (x == y) 0 else java.lang.Double.compare(x, y)
+
   /** Ascending in goodness: first() is the WORST retained entry
     * (lowest score; largest id on score ties), so capped insertion
-    * evicts via pollFirst. java.lang.Double.compare totally orders
-    * doubles the same way Spark's sort does. Statically defined —
-    * the buffer (and so its comparator) ships with the task closure. */
+    * evicts via pollFirst. Statically defined — the buffer (and so
+    * its comparator) ships with the task closure. */
   object Cmp extends Comparator[(Double, Long)] with Serializable {
     override def compare(a: (Double, Long), b: (Double, Long)): Int = {
-      val s = java.lang.Double.compare(a._1, b._1)
+      val s = compareScores(a._1, b._1)
       if (s != 0) s else java.lang.Long.compare(b._2, a._2)
     }
   }

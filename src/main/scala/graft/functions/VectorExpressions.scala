@@ -201,14 +201,15 @@ object GraftFunctions {
 
   /** Bounded-state top-k of (score, id) pairs, best-first by
     * (score DESC, id ASC) — the shuffle-light replacement for a
-    * rank-window top-k (see [[TopKPairsAgg]]). Injected variants:
-    * k ∈ [[TopKKs]] (1 = argmax, the hard-negative miner). */
+    * rank-window top-k (see [[TopKPairsAgg]]); queries reach it through
+    * [[graft.ops.ExactTopK]]. Injected variants: k ∈ [[TopKKs]]
+    * (1 = argmax, the hard-negative miner; 3 = the multimodal k-NN). */
   def topKPairs(score: Column, id: Column, k: Int): Column = {
     require(TopKKs.contains(k), s"topKPairs supports k in $TopKKs, got $k")
     call(s"graft_topk_$k", score, id)
   }
 
-  private[functions] val TopKKs = Set(1, 5, 10, 100)
+  private[functions] val TopKKs = Set(1, 3, 5, 10, 100)
 
   private type Builder = Seq[Expression] => Expression
 

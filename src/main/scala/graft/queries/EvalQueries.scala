@@ -2,8 +2,8 @@ package graft.queries
 
 import graft.QueryDef
 import graft.functions.GraftFunctions
+import graft.ops.ExactTopK
 import graft.ops.TextOps._
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -69,37 +69,11 @@ object EvalQueries {
          |GROUP BY b.query_id""".stripMargin
     })(
       (s, d) => {
-        import SimilarityQueries.{pqBase, querySetPred, vecs}
+        import SimilarityQueries.{bruteTopK, pqAdcTop, vecs}
         // exact leg: brute-force cosine top-k (same shape as q_ann_brute_topk)
-        val n = vecs(s, d)
-        val q = n.where(expr(querySetPred))
-          .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
-        val c = n.select(col("vec_id").as("neighbor_id"), col("v").as("cv"),
-          col("nrm").as("cn"))
-        val wB = Window.partitionBy(col("query_id"))
-          .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-        val brute = broadcast(q).join(c, col("neighbor_id") =!= col("query_id"))
-          .withColumn("cos_sim",
-            GraftFunctions.dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
-          .withColumn("rnk", row_number().over(wB))
-          .where(col("rnk") <= k)
-          .select(col("query_id"), col("neighbor_id"))
+        val brute = bruteTopK(vecs(s, d), k)
         // approximate leg: ADC over PQ codes (same shape as q_ann_pq_search)
-        val (dists, codes) = pqBase(s, d)
-        val dtable = dists.where(expr(querySetPred))
-          .select(col("vec_id").as("query_id"), col("subspace"), col("code"),
-            floor(col("dist") * 1000000000L).cast("bigint").as("d_scaled"))
-        val adc = codes.select(col("vec_id").as("candidate_id"),
-            col("subspace"), col("code"))
-          .join(broadcast(dtable), Seq("subspace", "code"))
-          .where(col("candidate_id") =!= col("query_id"))
-          .groupBy(col("query_id"), col("candidate_id"))
-          .agg(sum(col("d_scaled")).as("adc_scaled"))
-        val wA = Window.partitionBy(col("query_id"))
-          .orderBy(col("adc_scaled").asc, col("candidate_id").asc)
-        val adcTop = adc.withColumn("rnk", row_number().over(wA))
-          .where(col("rnk") <= k)
-          .select(col("query_id"), col("candidate_id"))
+        val adcTop = pqAdcTop(s, d, k)
         brute.alias("b")
           .join(adcTop.alias("a"),
             col("a.query_id") === col("b.query_id") &&
@@ -161,36 +135,9 @@ object EvalQueries {
          |GROUP BY a.query_id""".stripMargin
     })(
       (s, d) => {
-        import SimilarityQueries.{pqBase, querySetPred, vecs}
-        val n = vecs(s, d)
-        val q = n.where(expr(querySetPred))
-          .select(col("vec_id").as("query_id"), col("v").as("qv"),
-            col("nrm").as("qn"))
-        val c = n.select(col("vec_id").as("neighbor_id"), col("v").as("cv"),
-          col("nrm").as("cn"))
-        val wB = Window.partitionBy(col("query_id"))
-          .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-        val brute = broadcast(q).join(c, col("neighbor_id") =!= col("query_id"))
-          .withColumn("cos_sim",
-            GraftFunctions.dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
-          .withColumn("rnk", row_number().over(wB))
-          .where(col("rnk") <= k)
-          .select(col("query_id"), col("neighbor_id"))
-        val (dists, codes) = pqBase(s, d)
-        val dtable = dists.where(expr(querySetPred))
-          .select(col("vec_id").as("query_id"), col("subspace"), col("code"),
-            floor(col("dist") * 1000000000L).cast("bigint").as("d_scaled"))
-        val adc = codes.select(col("vec_id").as("candidate_id"),
-            col("subspace"), col("code"))
-          .join(broadcast(dtable), Seq("subspace", "code"))
-          .where(col("candidate_id") =!= col("query_id"))
-          .groupBy(col("query_id"), col("candidate_id"))
-          .agg(sum(col("d_scaled")).as("adc_scaled"))
-        val wA = Window.partitionBy(col("query_id"))
-          .orderBy(col("adc_scaled").asc, col("candidate_id").asc)
-        val adcTop = adc.withColumn("rnk", row_number().over(wA))
-          .where(col("rnk") <= k)
-          .select(col("query_id"), col("candidate_id"), col("rnk"))
+        import SimilarityQueries.{bruteTopK, pqAdcTop, vecs}
+        val brute = bruteTopK(vecs(s, d), k)
+        val adcTop = pqAdcTop(s, d, k)
         val w = (1 to k).foldLeft(lit(0L)) { (acc, i) =>
           when(col("a.rnk") === i, lit(discE12(i))).otherwise(acc)
         }
@@ -259,36 +206,9 @@ object EvalQueries {
          |GROUP BY a.query_id""".stripMargin
     })(
       (s, d) => {
-        import SimilarityQueries.{pqBase, querySetPred, vecs}
-        val n = vecs(s, d)
-        val q = n.where(expr(querySetPred))
-          .select(col("vec_id").as("query_id"), col("v").as("qv"),
-            col("nrm").as("qn"))
-        val c = n.select(col("vec_id").as("neighbor_id"), col("v").as("cv"),
-          col("nrm").as("cn"))
-        val wB = Window.partitionBy(col("query_id"))
-          .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-        val brute = broadcast(q).join(c, col("neighbor_id") =!= col("query_id"))
-          .withColumn("cos_sim",
-            GraftFunctions.dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
-          .withColumn("rnk", row_number().over(wB))
-          .where(col("rnk") <= k)
-          .select(col("query_id"), col("neighbor_id"), col("rnk"))
-        val (dists, codes) = pqBase(s, d)
-        val dtable = dists.where(expr(querySetPred))
-          .select(col("vec_id").as("query_id"), col("subspace"), col("code"),
-            floor(col("dist") * 1000000000L).cast("bigint").as("d_scaled"))
-        val adc = codes.select(col("vec_id").as("candidate_id"),
-            col("subspace"), col("code"))
-          .join(broadcast(dtable), Seq("subspace", "code"))
-          .where(col("candidate_id") =!= col("query_id"))
-          .groupBy(col("query_id"), col("candidate_id"))
-          .agg(sum(col("d_scaled")).as("adc_scaled"))
-        val wA = Window.partitionBy(col("query_id"))
-          .orderBy(col("adc_scaled").asc, col("candidate_id").asc)
-        val adcTop = adc.withColumn("rnk", row_number().over(wA))
-          .where(col("rnk") <= k)
-          .select(col("query_id"), col("candidate_id"), col("rnk"))
+        import SimilarityQueries.{bruteTopK, pqAdcTop, vecs}
+        val brute = bruteTopK(vecs(s, d), k)
+        val adcTop = pqAdcTop(s, d, k)
         val suffix = Seq(1 -> 1322L, 2 -> 362L, 3 -> 122L, 4 -> 42L)
           .foldRight(lit(12L): org.apache.spark.sql.Column) {
             case ((m, v), acc) =>
@@ -363,21 +283,12 @@ object EvalQueries {
          |GROUP BY i.np, qcnt.nq""".stripMargin
     })(
       (s, d) => {
-        import SimilarityQueries.{pqBase, querySetPred, vecs}
+        import SimilarityQueries.{bruteTopK, pqBase, querySetPred, vecs}
         val n = vecs(s, d)
         val q = n.where(expr(querySetPred))
           .select(col("vec_id").as("query_id"), col("v").as("qv"),
             col("nrm").as("qn"))
-        val c = n.select(col("vec_id").as("neighbor_id"), col("v").as("cv"),
-          col("nrm").as("cn"))
-        val wB = Window.partitionBy(col("query_id"))
-          .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-        val brute = broadcast(q).join(c, col("neighbor_id") =!= col("query_id"))
-          .withColumn("cos_sim",
-            GraftFunctions.dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
-          .withColumn("rnk", row_number().over(wB))
-          .where(col("rnk") <= k)
-          .select(col("query_id"), col("neighbor_id"))
+        val brute = bruteTopK(n, k)
         val qcnt = q.agg(count(lit(1)).as("nq"))
         val (dists, _) = pqBase(s, d)
         val routeW = Window.partitionBy(col("vec_id"))
@@ -464,29 +375,13 @@ object EvalQueries {
          |GROUP BY ft.query_id""".stripMargin
     })(
       (s, d) => {
-        import SimilarityQueries.{querySetPred, vecs}
-        def topk(n: DataFrame): DataFrame = {
-          val q = n.where(expr(querySetPred))
-            .select(col("vec_id").as("query_id"), col("v").as("qv"),
-              col("nrm").as("qn"))
-          val c = n.select(col("vec_id").as("neighbor_id"),
-            col("v").as("cv"), col("nrm").as("cn"))
-          val w = Window.partitionBy(col("query_id"))
-            .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-          broadcast(q).join(c, col("neighbor_id") =!= col("query_id"))
-            .withColumn("cos_sim",
-              GraftFunctions.dot(col("qv"), col("cv"))
-                / (col("qn") * col("cn")))
-            .withColumn("rnk", row_number().over(w))
-            .where(col("rnk") <= k)
-            .select(col("query_id"), col("neighbor_id"))
-        }
+        import SimilarityQueries.{bruteTopK, vecs}
         val full = vecs(s, d).select(col("vec_id"), col("v"), col("nrm"))
         val trunc = vecs(s, d)
           .select(col("vec_id"), slice(col("v"), 1, 16).as("v"))
           .withColumn("nrm", GraftFunctions.norm(col("v")))
-        topk(full).alias("ft")
-          .join(topk(trunc).alias("tt"),
+        bruteTopK(full, k).alias("ft")
+          .join(bruteTopK(trunc, k).alias("tt"),
             col("tt.query_id") === col("ft.query_id") &&
               col("tt.neighbor_id") === col("ft.neighbor_id"), "left")
           .groupBy(col("ft.query_id").as("query_id"))
@@ -544,22 +439,8 @@ object EvalQueries {
          |GROUP BY ft.query_id""".stripMargin
     })(
       (s, d) => {
-        import SimilarityQueries.{querySetPred, vecs}
-        val full = vecs(s, d)
-        val qf = full.where(expr(querySetPred))
-          .select(col("vec_id").as("query_id"), col("v").as("qv"),
-            col("nrm").as("qn"))
-        val cf = full.select(col("vec_id").as("neighbor_id"),
-          col("v").as("cv"), col("nrm").as("cn"))
-        val wF = Window.partitionBy(col("query_id"))
-          .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-        val fullTop = broadcast(qf)
-          .join(cf, col("neighbor_id") =!= col("query_id"))
-          .withColumn("cos_sim", GraftFunctions.dot(col("qv"), col("cv"))
-            / (col("qn") * col("cn")))
-          .withColumn("rnk", row_number().over(wF))
-          .where(col("rnk") <= k)
-          .select(col("query_id"), col("neighbor_id"))
+        import SimilarityQueries.{bruteTopK, querySetPred, vecs}
+        val fullTop = bruteTopK(vecs(s, d), k)
         def mask(lo: Int) = expr(
           s"aggregate(sequence($lo, ${lo + 31}), 0L, (x, j) -> " +
             s"x + CASE WHEN element_at(v, CAST(j AS INT)) > 0 " +
@@ -572,16 +453,14 @@ object EvalQueries {
             col("mhi").as("qhi"))
         val cb = bq.select(col("vec_id").as("neighbor_id"), col("mlo"),
           col("mhi"))
-        val wB = Window.partitionBy(col("query_id"))
-          .orderBy(col("hd").asc, col("neighbor_id").asc)
-        val bqTop = broadcast(qb)
+        // Hamming distance, negated so the nearest ranks first
+        val bqScored = broadcast(qb)
           .join(cb, col("neighbor_id") =!= col("query_id"))
-          .withColumn("hd",
-            bit_count(col("qlo").bitwiseXOR(col("mlo"))) +
-              bit_count(col("qhi").bitwiseXOR(col("mhi"))))
-          .withColumn("rnk", row_number().over(wB))
-          .where(col("rnk") <= k)
-          .select(col("query_id"), col("neighbor_id"))
+          .withColumn("neg_hd",
+            (-(bit_count(col("qlo").bitwiseXOR(col("mlo"))) +
+              bit_count(col("qhi").bitwiseXOR(col("mhi"))))).cast("double"))
+        val bqTop = ExactTopK.topK(bqScored, Seq("query_id"), "neg_hd",
+          "neighbor_id", k)
         fullTop.alias("ft")
           .join(bqTop.alias("bt"),
             col("bt.query_id") === col("ft.query_id") &&
@@ -631,20 +510,15 @@ object EvalQueries {
             col("v").as("qv"), col("nrm").as("qn"))
         val c = n.select(col("vec_id").as("candidate_id"), col("label"),
           col("v").as("cv"), col("nrm").as("cn"))
+        val brute1 = ExactTopK.topK(
+            ExactTopK.scored(q, c, col("candidate_id") =!= col("query_id")),
+            Seq("query_id"), "cos_sim", "candidate_id", 1)
+          .select(col("query_id"), col("candidate_id").as("neighbor_id"))
+        // the full in-cell ranking: a window over the cell equi-join
         val w = Window.partitionBy(col("query_id"))
           .orderBy(col("cos_sim").desc, col("candidate_id").asc)
-        val brute1 = broadcast(q)
-          .join(c, col("candidate_id") =!= col("query_id"))
-          .withColumn("cos_sim",
-            GraftFunctions.dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
-          .withColumn("rnk", row_number().over(w))
-          .where(col("rnk") === 1)
-          .select(col("query_id"), col("candidate_id").as("neighbor_id"))
-        val ivfRank = broadcast(q)
-          .join(c, col("label") === col("qcell") &&
+        val ivfRank = ExactTopK.scored(q, c, col("label") === col("qcell") &&
             col("candidate_id") =!= col("query_id"))
-          .withColumn("cos_sim",
-            GraftFunctions.dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
           .withColumn("rnk", row_number().over(w))
           .select(col("query_id"), col("candidate_id"), col("rnk"))
         brute1.alias("b")

@@ -133,131 +133,133 @@ object KtableProbe {
     sink.append(spark.range(0, total).where(col("id") % 10 === 0)
       .select(col("id").as("k"), lit("upd").as("s"),
         (col("id") * 11).as("c")), t)
-    graft.sources.KeyedTableRegistry.register(spark)
-    spark.sql(s"DELETE FROM graft_keyed.`$t` WHERE k IN (1, $key)")
+    // the rest of the probe reads with the catalog and v2 bucketing on
+    graft.sources.KeyedTableRegistry.withKeyedCatalog(spark) {
+      spark.sql(s"DELETE FROM graft_keyed.`$t` WHERE k IN (1, $key)")
 
-    def latest = graft.sources.KeyedTableOps.latest(spark, t)
-    val (nLat, tLat) = timed(latest.count())
-    val latShuffles = graft.ops.PlanChecks.countShuffles(
-      latest.queryExecution.executedPlan)
-    emit("probe" -> "latest_pre_rewrite", "rows" -> nLat,
-      "live_files" -> KeyedTable.liveFiles(t).size,
-      "shuffles" -> latShuffles, "sec" -> tLat)
+      def latest = graft.sources.KeyedTableOps.latest(spark, t)
+      val (nLat, tLat) = timed(latest.count())
+      val latShuffles = graft.ops.PlanChecks.countShuffles(
+        latest.queryExecution.executedPlan)
+      emit("probe" -> "latest_pre_rewrite", "rows" -> nLat,
+        "live_files" -> KeyedTable.liveFiles(t).size,
+        "shuffles" -> latShuffles, "sec" -> tLat)
 
-    val (folded2, tRw) = timed(
-      graft.sources.KeyedTableOps.rewriteCompact(spark, t, 0))
-    emit("probe" -> "rewrite_compact", "folded" -> folded2.isDefined,
-      "sec" -> tRw)
+      val (folded2, tRw) = timed(
+        graft.sources.KeyedTableOps.rewriteCompact(spark, t, 0))
+      emit("probe" -> "rewrite_compact", "folded" -> folded2.isDefined,
+        "sec" -> tRw)
 
-    val (nLat2, tLat2) = timed(latest.count())
-    emit("probe" -> "latest_post_rewrite", "rows" -> nLat2,
-      "live_files" -> KeyedTable.liveFiles(t).size,
-      "sec" -> tLat2)
+      val (nLat2, tLat2) = timed(latest.count())
+      emit("probe" -> "latest_post_rewrite", "rows" -> nLat2,
+        "live_files" -> KeyedTable.liveFiles(t).size,
+        "sec" -> tLat2)
 
-    val (reclaimed, tVac) = timed(KeyedTable.vacuum(t, graceMs = 0))
-    emit("probe" -> "vacuum", "reclaimed_files" -> reclaimed.size,
-      "sec" -> tVac)
+      val (reclaimed, tVac) = timed(KeyedTable.vacuum(t, graceMs = 0))
+      emit("probe" -> "vacuum", "reclaimed_files" -> reclaimed.size,
+        "sec" -> tVac)
 
-    // stats-driven auto-compaction: the decision is metadata-only (one
-    // _commits listing, zero data bytes); on the just-folded table it
-    // must be a cheap no-op
-    val (decision, tPol) = timed(graft.sources.KeyedTableOps.maybeCompact(
-      spark, t,
-      graft.sources.KeyedTableOps.CompactionPolicy(minLiveDataManifests = 8)))
-    emit("probe" -> "auto_compact_decision", "folded" -> decision.isDefined,
-      "sec" -> tPol)
+      // stats-driven auto-compaction: the decision is metadata-only (one
+      // _commits listing, zero data bytes); on the just-folded table it
+      // must be a cheap no-op
+      val (decision, tPol) = timed(graft.sources.KeyedTableOps.maybeCompact(
+        spark, t,
+        graft.sources.KeyedTableOps.CompactionPolicy(minLiveDataManifests = 8)))
+      emit("probe" -> "auto_compact_decision", "folded" -> decision.isDefined,
+        "sec" -> tPol)
 
-    // COUNTER table probe — on its OWN table with merge=counter
-    // declared (the main `t` is an LWW table; measuring counterTotals
-    // on it post-rewrite would sum one surviving row per key, not a
-    // counter workload): 8 increment commits per key, the sum-merge
-    // read exchange-free through the catalog, then the counter FOLD
-    // (additive merge — never LWW) with sums proven unmoved across it
-    val tc = s"$dir/tc"
-    val incCommits = 8
-    (0 until incCommits).foreach { _ =>
-      sink.append(spark.range(0, per)
-        .select(col("id").as("k"), lit(1L).as("c")), tc)
+      // COUNTER table probe — on its OWN table with merge=counter
+      // declared (the main `t` is an LWW table; measuring counterTotals
+      // on it post-rewrite would sum one surviving row per key, not a
+      // counter workload): 8 increment commits per key, the sum-merge
+      // read exchange-free through the catalog, then the counter FOLD
+      // (additive merge — never LWW) with sums proven unmoved across it
+      val tc = s"$dir/tc"
+      val incCommits = 8
+      (0 until incCommits).foreach { _ =>
+        sink.append(spark.range(0, per)
+          .select(col("id").as("k"), lit(1L).as("c")), tc)
+      }
+      graft.sources.KeyedTableOps.declareMerge(tc, "counter")
+      def totals = graft.sources.KeyedTableOps.counterTotals(spark, tc, Seq("c"))
+      val (sumPre, tCntPre) = timed(
+        totals.agg(sum(col("sum_c"))).head.getLong(0))
+      emit("probe" -> "counter_totals_pre_fold", "keys" -> per,
+        "increments" -> incCommits * per, "sum" -> sumPre,
+        "shuffles" -> graft.ops.PlanChecks.countShuffles(
+          totals.queryExecution.executedPlan), "sec" -> tCntPre)
+      val (_, tFold) = timed(
+        graft.sources.KeyedTableOps.rewriteCompact(spark, tc, 0))
+      val (sumPost, tCntPost) = timed(
+        totals.agg(sum(col("sum_c"))).head.getLong(0))
+      emit("probe" -> "counter_totals_post_fold",
+        "sum_matches" -> (sumPre == sumPost),
+        "live_files" -> KeyedTable.liveFiles(tc).size,
+        "fold_sec" -> tFold, "sec" -> tCntPost)
+
+      // raw scans over the folded table read one commit's worth of bytes
+      val (nFull2, tFull2) = timed(
+        read.select(col("s")).where(length(col("s")) > 0).count())
+      emit("probe" -> "full_scan_post_rewrite", "rows" -> nFull2,
+        "sec" -> tFull2)
+
+      // ---- sub-file block pruning (round 18): the folded table holds
+      // one ~rows/4 file per bucket, each with a block footer; a point
+      // probe plans ONE file and decodes ONE BLOCK of it — the scan
+      // metrics are the receipt
+      def scanMetric(df: DataFrame, name: String): Long =
+        df.queryExecution.executedPlan.collect {
+          case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+            b.metrics.get(name).map(_.value).getOrElse(0L)
+        }.sum
+      val blkProbe = read.where(col("k") === (key + 2))
+      val (_, tBlk) = timed(blkProbe.collect())
+      emit("probe" -> "block_prune_point",
+        "decoded_rows" -> scanMetric(blkProbe, "decodedRows"),
+        "pruned_rows" -> scanMetric(blkProbe, "blockPrunedRows"),
+        "planned_files" -> plannedFiles(blkProbe),
+        "of_files" -> KeyedTable.liveFiles(t).size, "sec" -> tBlk)
+
+      // ---- bucket-count evolution (round 18): scale 4 -> 8 buckets;
+      // clustered reads return at the new modulus and the point ladder
+      // holds
+      val (rebucketed, tRb) = timed(
+        graft.sources.KeyedTableOps.rebucket(spark, t, 8,
+          tombstoneGraceMs = 0))
+      val catT = spark.read.table(s"graft_keyed.`$t`")
+      catT.count()
+      emit("probe" -> "rebucket_4_to_8", "folded" -> rebucketed.isDefined,
+        "clustered_partitions" -> plannedFiles(catT),
+        "live_files" -> KeyedTable.liveFiles(t).size, "sec" -> tRb)
+      val lk3 = read.where(col("k") === (key + 2))
+      val (_, tLk3) = timed(lk3.collect())
+      emit("probe" -> "point_lookup_post_rebucket",
+        "planned_files" -> plannedFiles(lk3),
+        "of_files" -> KeyedTable.liveFiles(t).size,
+        "decoded_rows" -> scanMetric(lk3, "decodedRows"), "sec" -> tLk3)
+
+      // ---- per-file bloom filters (round 19): declare the UNIQUE,
+      // UNSORTED string column and force-fold so every live file gets a
+      // sidecar; an equality probe for an IN-RANGE absent value then
+      // plans ZERO files where zone maps alone plan all of them, and a
+      // present-value probe plans the one file that can hold it
+      // roll at 64k rows so the ~10 bits/row sizing holds per file
+      graft.sources.KeyedTableOps.declareBloomColumns(t, Seq("s"))
+      val (_, tBloomFold) = timed(graft.sources.KeyedTableOps
+        .rewriteCompact(spark, t, 0, targetFileRows = 65536, force = true))
+      val liveAfterBloom = KeyedTable.liveFiles(t).size
+      val absentProbe = read.where(col("s") === s"v${key}x") // in-range, absent
+      val (absentHits, tAbsent) = timed(absentProbe.collect())
+      emit("probe" -> "bloom_point_absent", "hits" -> absentHits.length,
+        "planned_files" -> plannedFiles(absentProbe),
+        "of_files" -> liveAfterBloom, "fold_sec" -> tBloomFold,
+        "sec" -> tAbsent)
+      val presentProbe = read.where(col("s") === s"v${key + 2}")
+      val (presentHits, tPresent) = timed(presentProbe.collect())
+      emit("probe" -> "bloom_point_present", "hits" -> presentHits.length,
+        "planned_files" -> plannedFiles(presentProbe),
+        "of_files" -> liveAfterBloom, "sec" -> tPresent)
     }
-    graft.sources.KeyedTableOps.declareMerge(tc, "counter")
-    def totals = graft.sources.KeyedTableOps.counterTotals(spark, tc, Seq("c"))
-    val (sumPre, tCntPre) = timed(
-      totals.agg(sum(col("sum_c"))).head.getLong(0))
-    emit("probe" -> "counter_totals_pre_fold", "keys" -> per,
-      "increments" -> incCommits * per, "sum" -> sumPre,
-      "shuffles" -> graft.ops.PlanChecks.countShuffles(
-        totals.queryExecution.executedPlan), "sec" -> tCntPre)
-    val (_, tFold) = timed(
-      graft.sources.KeyedTableOps.rewriteCompact(spark, tc, 0))
-    val (sumPost, tCntPost) = timed(
-      totals.agg(sum(col("sum_c"))).head.getLong(0))
-    emit("probe" -> "counter_totals_post_fold",
-      "sum_matches" -> (sumPre == sumPost),
-      "live_files" -> KeyedTable.liveFiles(tc).size,
-      "fold_sec" -> tFold, "sec" -> tCntPost)
-
-    // raw scans over the folded table read one commit's worth of bytes
-    val (nFull2, tFull2) = timed(
-      read.select(col("s")).where(length(col("s")) > 0).count())
-    emit("probe" -> "full_scan_post_rewrite", "rows" -> nFull2,
-      "sec" -> tFull2)
-
-    // ---- sub-file block pruning (round 18): the folded table holds
-    // one ~rows/4 file per bucket, each with a block footer; a point
-    // probe plans ONE file and decodes ONE BLOCK of it — the scan
-    // metrics are the receipt
-    def scanMetric(df: DataFrame, name: String): Long =
-      df.queryExecution.executedPlan.collect {
-        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-          b.metrics.get(name).map(_.value).getOrElse(0L)
-      }.sum
-    val blkProbe = read.where(col("k") === (key + 2))
-    val (_, tBlk) = timed(blkProbe.collect())
-    emit("probe" -> "block_prune_point",
-      "decoded_rows" -> scanMetric(blkProbe, "decodedRows"),
-      "pruned_rows" -> scanMetric(blkProbe, "blockPrunedRows"),
-      "planned_files" -> plannedFiles(blkProbe),
-      "of_files" -> KeyedTable.liveFiles(t).size, "sec" -> tBlk)
-
-    // ---- bucket-count evolution (round 18): scale 4 -> 8 buckets;
-    // clustered reads return at the new modulus and the point ladder
-    // holds
-    val (rebucketed, tRb) = timed(
-      graft.sources.KeyedTableOps.rebucket(spark, t, 8,
-        tombstoneGraceMs = 0))
-    val catT = spark.read.table(s"graft_keyed.`$t`")
-    catT.count()
-    emit("probe" -> "rebucket_4_to_8", "folded" -> rebucketed.isDefined,
-      "clustered_partitions" -> plannedFiles(catT),
-      "live_files" -> KeyedTable.liveFiles(t).size, "sec" -> tRb)
-    val lk3 = read.where(col("k") === (key + 2))
-    val (_, tLk3) = timed(lk3.collect())
-    emit("probe" -> "point_lookup_post_rebucket",
-      "planned_files" -> plannedFiles(lk3),
-      "of_files" -> KeyedTable.liveFiles(t).size,
-      "decoded_rows" -> scanMetric(lk3, "decodedRows"), "sec" -> tLk3)
-
-    // ---- per-file bloom filters (round 19): declare the UNIQUE,
-    // UNSORTED string column and force-fold so every live file gets a
-    // sidecar; an equality probe for an IN-RANGE absent value then
-    // plans ZERO files where zone maps alone plan all of them, and a
-    // present-value probe plans the one file that can hold it
-    // roll at 64k rows so the ~10 bits/row sizing holds per file
-    graft.sources.KeyedTableOps.declareBloomColumns(t, Seq("s"))
-    val (_, tBloomFold) = timed(graft.sources.KeyedTableOps
-      .rewriteCompact(spark, t, 0, targetFileRows = 65536, force = true))
-    val liveAfterBloom = KeyedTable.liveFiles(t).size
-    val absentProbe = read.where(col("s") === s"v${key}x") // in-range, absent
-    val (absentHits, tAbsent) = timed(absentProbe.collect())
-    emit("probe" -> "bloom_point_absent", "hits" -> absentHits.length,
-      "planned_files" -> plannedFiles(absentProbe),
-      "of_files" -> liveAfterBloom, "fold_sec" -> tBloomFold,
-      "sec" -> tAbsent)
-    val presentProbe = read.where(col("s") === s"v${key + 2}")
-    val (presentHits, tPresent) = timed(presentProbe.collect())
-    emit("probe" -> "bloom_point_present", "hits" -> presentHits.length,
-      "planned_files" -> plannedFiles(presentProbe),
-      "of_files" -> liveAfterBloom, "sec" -> tPresent)
 
     graft.queries.StreamingQueries.deleteRecursively(dir.toString)
     spark.stop()

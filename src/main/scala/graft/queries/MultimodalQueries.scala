@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.multimodal.{FakeDecoder, Media}
+import graft.ops.ExactTopK
 import org.apache.spark.sql.functions._
 
 /** Multimodal binary-column queries (north-star extension). The
@@ -414,7 +415,6 @@ object MultimodalQueries {
     * broadcast; candidates scan stays partitioned — the
     * q_ann_brute_topk plan shape over decoded media. */
   private def knnOver(featsIn: org.apache.spark.sql.DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
     val feats = featsIn
       .select(col("media_id"), col("feature").cast("array<double>").as("v"))
       .withColumn("nrm", graft.functions.GraftFunctions.norm(col("v")))
@@ -423,14 +423,8 @@ object MultimodalQueries {
       .select(col("media_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
     val c = feats.select(col("media_id").as("neighbor_id"),
       col("v").as("cv"), col("nrm").as("cn"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-    broadcast(q).join(c, col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos_sim",
-        graft.functions.GraftFunctions.dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
-      .withColumn("rnk", row_number().over(w).cast("bigint"))
-      .where(col("rnk") <= 3)
-      .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rnk"))
+    ExactTopK.topK(ExactTopK.scored(q, c, col("neighbor_id") =!= col("query_id")),
+      Seq("query_id"), "cos_sim", "neighbor_id", 3)
   }
 
   /** The stub featurizer derives 8 float32 values from the FNV

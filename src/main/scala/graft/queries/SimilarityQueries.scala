@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.functions.GraftFunctions
+import graft.ops.ExactTopK
 import graft.ops.TextOps._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -59,6 +60,21 @@ object SimilarityQueries {
         col("embedding").cast("array<double>").as("v"))
       .withColumn("nrm", GraftFunctions.norm(col("v")))
       .persist()
+
+  /** Every query-set vector of `n` (vec_id, v, nrm) against every other
+    * vector: (query_id, qv, qn, neighbor_id, cv, cn, cos_sim). */
+  private[queries] def bruteScored(n: DataFrame): DataFrame = {
+    val q = n.where(expr(querySetPred))
+      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
+    val c = n.select(col("vec_id").as("neighbor_id"), col("v").as("cv"),
+      col("nrm").as("cn"))
+    ExactTopK.scored(q, c, col("neighbor_id") =!= col("query_id"))
+  }
+
+  /** Exact cosine top-k of every query-set vector of `n`:
+    * (query_id, neighbor_id, cos_sim, rnk). */
+  private[queries] def bruteTopK(n: DataFrame, k: Int): DataFrame =
+    ExactTopK.topK(bruteScored(n), Seq("query_id"), "cos_sim", "neighbor_id", k)
 
   /** Shared centroid CTEs (SQL): vectors + bit-exact per-cell mean
     * vectors via integer-scaled component sums — order-independent, so
@@ -256,6 +272,29 @@ object SimilarityQueries {
     (dists, codes)
   }
 
+  /** ADC top-k over the PQ codes: per query-set vector, the k
+    * candidates with the smallest integer-scaled ADC distance, as
+    * (query_id, candidate_id, adc_scaled, rnk). The rank window runs
+    * over an equi-join of the codes with the broadcast distance
+    * tables, not over a query × corpus cross. */
+  private[queries] def pqAdcTop(s: SparkSession, d: String, k: Int): DataFrame = {
+    val (dists, codes) = pqBase(s, d)
+    val dtable = dists.where(expr(querySetPred))
+      .select(col("vec_id").as("query_id"), col("subspace"), col("code"),
+        floor(col("dist") * 1000000000L).cast("bigint").as("d_scaled"))
+    val adc = codes.select(col("vec_id").as("candidate_id"),
+        col("subspace"), col("code"))
+      .join(broadcast(dtable), Seq("subspace", "code"))
+      .where(col("candidate_id") =!= col("query_id"))
+      .groupBy(col("query_id"), col("candidate_id"))
+      .agg(org.apache.spark.sql.functions.sum(col("d_scaled")).as("adc_scaled"))
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("adc_scaled").asc, col("candidate_id").asc)
+    adc.withColumn("rnk", row_number().over(w).cast("bigint"))
+      .where(col("rnk") <= k)
+      .select(col("query_id"), col("candidate_id"), col("adc_scaled"), col("rnk"))
+  }
+
   /** Cell-routed exact top-3 (cells = labels) — shared by the inline
     * IVF entry and the keyed-table-served index entry, so the two can
     * never drift. */
@@ -347,23 +386,7 @@ object SimilarityQueries {
          |SELECT query_id, candidate_id, adc_scaled, rnk FROM (
          |  SELECT *, row_number() OVER (PARTITION BY query_id
          |    ORDER BY adc_scaled, candidate_id) AS rnk FROM adc) WHERE rnk <= 5""".stripMargin))(
-      (s, d) => {
-        val (dists, codes) = pqBase(s, d)
-        val dtable = dists.where(expr(querySetPred))
-          .select(col("vec_id").as("query_id"), col("subspace"), col("code"),
-            floor(col("dist") * 1000000000L).cast("bigint").as("d_scaled"))
-        val adc = codes.select(col("vec_id").as("candidate_id"),
-            col("subspace"), col("code"))
-          .join(broadcast(dtable), Seq("subspace", "code"))
-          .where(col("candidate_id") =!= col("query_id"))
-          .groupBy(col("query_id"), col("candidate_id"))
-          .agg(org.apache.spark.sql.functions.sum(col("d_scaled")).as("adc_scaled"))
-        val w = Window.partitionBy(col("query_id"))
-          .orderBy(col("adc_scaled").asc, col("candidate_id").asc)
-        adc.withColumn("rnk", row_number().over(w).cast("bigint"))
-          .where(col("rnk") <= 5)
-          .select(col("query_id"), col("candidate_id"), col("adc_scaled"), col("rnk"))
-      }),
+      (s, d) => pqAdcTop(s, d, 5)),
 
     // ---- exact brute-force cosine top-k ----
     QueryDef("q_ann_brute_topk", Some(
@@ -379,28 +402,7 @@ object SimilarityQueries {
          |  SELECT *, row_number() OVER (PARTITION BY query_id
          |    ORDER BY cos_sim DESC, neighbor_id) AS rnk FROM scored
          |) WHERE rnk <= 5""".stripMargin), headline = true)(
-      (s, d) => {
-        val n = vecs(s, d)
-        val q = n.where(expr(querySetPred))
-          .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
-        val c = n.select(col("vec_id").as("neighbor_id"), col("v").as("cv"),
-          col("nrm").as("cn"))
-        // broadcast the SMALL query set against the partitioned candidate
-        // scan — at cluster scale the big side never shuffles — then
-        // keep only k pairs per (partition, query) via the
-        // bounded-state top-k aggregate: the shuffle carries k·16
-        // bytes per query per partition instead of ALL n·q scored
-        // pairs (a rank window would sort the full cross product only
-        // to discard it). Same (score DESC, id ASC) order as the
-        // oracle's window, so results are bit-identical.
-        broadcast(q).join(c, col("neighbor_id") =!= col("query_id"))
-          .withColumn("cos_sim", GraftFunctions.dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
-          .groupBy(col("query_id"))
-          .agg(GraftFunctions.topKPairs(col("cos_sim"), col("neighbor_id"), 5).as("tk"))
-          .select(col("query_id"), posexplode(col("tk")).as(Seq("pos", "e")))
-          .select(col("query_id"), col("e.id").as("neighbor_id"),
-            col("e.score").as("cos_sim"), (col("pos") + 1).cast("bigint").as("rnk"))
-      }),
+      (s, d) => bruteTopK(vecs(s, d), 5)),
 
     // ---- IVF: search only the query's coarse cell (label) ----
     QueryDef("q_ann_ivf_label", Some(ivfLabelOracleSql))(
@@ -847,17 +849,15 @@ object SimilarityQueries {
         val qv = n.where(expr(querySetPred))
           .select(col("vec_id").as("query_id"), col("v").as("qv"))
         val cv = n.select(col("vec_id").as("candidate_id"), col("v").as("cv"))
-        cv.join(broadcast(short), Seq("candidate_id"))
+        val rr = cv.join(broadcast(short), Seq("candidate_id"))
           .join(broadcast(qv), Seq("query_id"))
-          .withColumn("d2",
-            GraftFunctions.dot(col("qv"), col("qv"))
+          .withColumn("neg_d2",
+            -(GraftFunctions.dot(col("qv"), col("qv"))
               - lit(2.0) * GraftFunctions.dot(col("qv"), col("cv"))
-              + GraftFunctions.dot(col("cv"), col("cv")))
-          .groupBy(col("query_id"))
-          .agg(GraftFunctions.topKPairs(-col("d2"), col("candidate_id"), 5).as("tk"))
-          .select(col("query_id"), posexplode(col("tk")).as(Seq("pos", "e")))
-          .select(col("query_id"), col("e.id").as("candidate_id"),
-            (-col("e.score")).as("d2"), (col("pos") + 1).cast("bigint").as("rnk"))
+              + GraftFunctions.dot(col("cv"), col("cv"))))
+        ExactTopK.topK(rr, Seq("query_id"), "neg_d2", "candidate_id", 5)
+          .select(col("query_id"), col("candidate_id"),
+            (-col("neg_d2")).as("d2"), col("rnk"))
       }),
 
     // ---- residual IVF-PQ: the faithful composed index. Vectors are
@@ -1120,18 +1120,9 @@ object SimilarityQueries {
          |FROM (SELECT * FROM n WHERE $querySetPred) q
          |JOIN n c ON c.vec_id <> q.vec_id
          |WHERE ${dotDSql("q.v", "c.v")} / (q.nrm * c.nrm) >= 0.3""".stripMargin))(
-      (s, d) => {
-        val n = vecs(s, d)
-        val q = n.where(expr(querySetPred))
-          .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
-        val c = n.select(col("vec_id").as("neighbor_id"), col("v").as("cv"),
-          col("nrm").as("cn"))
-        broadcast(q).join(c, col("neighbor_id") =!= col("query_id"))
-          .withColumn("cos_sim",
-            GraftFunctions.dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
-          .where(col("cos_sim") >= 0.3)
-          .select(col("query_id"), col("neighbor_id"), col("cos_sim"))
-      }),
+      (s, d) =>
+        bruteScored(vecs(s, d)).where(col("cos_sim") >= 0.3)
+          .select(col("query_id"), col("neighbor_id"), col("cos_sim"))),
 
     // ---- one POWER-ITERATION step toward the corpus' top principal
     // direction: v₁ ∝ Xᵀ(X·v₀) with v₀ = 1 — the matrix-free
@@ -1340,15 +1331,9 @@ object SimilarityQueries {
           .where(expr("query_id % 100 = 0"))
         val c = n.select(col("vec_id").as("negative_id"),
           col("label").as("negative_label"), col("v").as("cv"), col("nrm").as("cn"))
-        broadcast(q).join(c, col("negative_label") =!= col("query_label"))
-          .withColumn("cos_sim",
-            GraftFunctions.dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
-          .groupBy(col("query_id"), col("query_label"))
-          .agg(GraftFunctions.topKPairs(col("cos_sim"), col("negative_id"), 1).as("tk"))
-          .select(col("query_id"), col("query_label"),
-            explode(col("tk")).as("e"))
-          .select(col("query_id"), col("query_label"),
-            col("e.id").as("negative_id"), col("e.score").as("cos_sim"))
+        ExactTopK.topK(
+            ExactTopK.scored(q, c, col("negative_label") =!= col("query_label")),
+            Seq("query_id", "query_label"), "cos_sim", "negative_id", 1)
           .join(broadcast(c.select(col("negative_id"), col("negative_label"))),
             "negative_id")
           .select(col("query_id"), col("query_label"), col("negative_id"),

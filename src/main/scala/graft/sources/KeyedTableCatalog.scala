@@ -276,24 +276,22 @@ class KeyedTableCatalog extends TableCatalog with FunctionCatalog
       .NoSuchFunctionException(name0, ident.name)
 }
 
-/** One-line session wiring for clustered KeyedTable reads: registers
-  * the catalog under `graft_keyed` and turns on Spark's v2-bucketing
-  * switch (the gate under which reported KeyGroupedPartitioning is
-  * honored — and under which the scan plans bucket-grouped partitions
-  * instead of per-file ones). Idempotent; callable any time before
-  * the read. A declared memo (see [[graft.SessionConf]]): Spark loads
-  * a catalog once per session and keeps it, so its registration is
-  * kept too; [[withKeyedCatalog]] scopes the bucketing switch. */
+/** Session wiring for clustered KeyedTable reads: the catalog under
+  * `graft_keyed`, and Spark's v2-bucketing switch (the gate under
+  * which reported KeyGroupedPartitioning is honored — and under which
+  * the scan plans bucket-grouped partitions instead of per-file ones). */
 object KeyedTableRegistry {
   val CatalogName = "graft_keyed"
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
+
+  /** Registers the catalog and nothing else. Idempotent. A declared
+    * memo (see [[graft.SessionConf]]): Spark loads a catalog once per
+    * session and keeps it, so its registration is kept too. */
+  def register(spark: org.apache.spark.sql.SparkSession): Unit =
     spark.conf.set(s"spark.sql.catalog.$CatalogName",
       classOf[KeyedTableCatalog].getName)
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-  }
 
   /** `body` with the catalog registered and v2 bucketing on for `body`
-    * only. */
+    * only — the one place the bucketing switch is set. */
   def withKeyedCatalog[A](spark: org.apache.spark.sql.SparkSession)(
       body: => A): A =
     graft.SessionConf.withConfs(spark,

@@ -114,11 +114,12 @@ class BlockPruneSpec extends SparkSpecBase {
     val s = spark
     import s.implicits._
     write(t, Seq((777L, "new", 0L)).toDF("k", "s", "c"), blockRows = 64)
-    graft.sources.KeyedTableRegistry.register(spark)
-    spark.sql(s"DELETE FROM graft_keyed.`$t` WHERE k = 5")
-    val cur = spark.read.option("view", "current").table(s"graft_keyed.`$t`")
-      .where(col("k").isin(5L, 777L, 10L)).collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    val cur = graft.sources.KeyedTableRegistry.withKeyedCatalog(spark) {
+      spark.sql(s"DELETE FROM graft_keyed.`$t` WHERE k = 5")
+      spark.read.option("view", "current").table(s"graft_keyed.`$t`")
+        .where(col("k").isin(5L, 777L, 10L)).collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toMap
+    }
     assert(cur === Map(777L -> "new", 10L -> "v10"))
   }
 

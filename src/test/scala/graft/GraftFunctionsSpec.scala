@@ -71,12 +71,12 @@ class GraftFunctionsSpec extends SparkSpecBase {
     Seq(64, 256).map(k => s"graft_kmv_$k") ++
     Seq(128, 400).map(k => s"graft_kll_$k") ++
     Seq(16, 64).map(k => s"graft_mg_$k") ++
-    Seq(1, 5, 10, 100).map(k => s"graft_topk_$k") ++
+    Seq(1, 3, 5, 10, 100).map(k => s"graft_topk_$k") ++
     Seq(3, 5, 16).flatMap(n =>
       Seq(s"graft_shingle_hashes_${n}_modp", s"graft_shingle_hashes_${n}_raw"))
 
   test("every engine function resolves in a new session, SQL == Column helper") {
-    assert(injected.distinct.size === 31)
+    assert(injected.distinct.size === 32)
     // a fresh session: no helper has run in it, so only the extension
     // can have registered these names
     val s = spark.newSession()

@@ -24,10 +24,8 @@ class KCdfStreamSpec extends SparkSpecBase {
 
   private def sink = V2KeyedTableSink("k", writeParallelism = 4)
 
-  private def withCatalog[A](body: => A): A = {
-    KeyedTableRegistry.register(spark)
-    body
-  }
+  private def withCatalog[A](body: => A): A =
+    KeyedTableRegistry.withKeyedCatalog(spark)(body)
 
   private def runCdf(t: String, out: String, ckpt: String,
       perTrigger: Int = 10): Unit = {

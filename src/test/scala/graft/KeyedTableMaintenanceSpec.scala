@@ -349,8 +349,9 @@ class KeyedTableMaintenanceSpec extends SparkSpecBase {
     val t = tmpTable("graft_autot_")
     val sink = V2KeyedTableSink("k", 4)
     sink.append(rows(50), t)
-    KeyedTableRegistry.register(spark)
-    spark.sql(s"DELETE FROM graft_keyed.`$t` WHERE k IN (1, 2)")
+    KeyedTableRegistry.withKeyedCatalog(spark) {
+      spark.sql(s"DELETE FROM graft_keyed.`$t` WHERE k IN (1, 2)")
+    }
     val strict = KeyedTableOps.CompactionPolicy(
       minLiveDataManifests = 99, tombstoneGraceMs = 3600 * 1000)
     // tombstone younger than grace: not purgeable -> no-op

@@ -15,11 +15,10 @@ class NdvStatsSpec extends SparkSpecBase {
   private def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
-  private def withCbo[A](body: => A): A = {
-    KeyedTableRegistry.register(spark)
-    withConfs(spark, Map("spark.sql.cbo.enabled" -> Some("true"),
-      "spark.sql.cbo.joinReorder.enabled" -> Some("true")))(body)
-  }
+  private def withCbo[A](body: => A): A =
+    KeyedTableRegistry.withKeyedCatalog(spark)(
+      withConfs(spark, Map("spark.sql.cbo.enabled" -> Some("true"),
+        "spark.sql.cbo.joinReorder.enabled" -> Some("true")))(body))
 
   private def table(t: String): DataFrame =
     spark.read.table(s"graft_keyed.`$t`")

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
+import org.apache.spark.sql.execution.window.WindowExec
 
 /** Catalog-wide physical-plan guard: NO entry may plan a cartesian
   * product or a nested-loop join whose broadcast side is unbounded.
@@ -26,9 +27,10 @@ class PlanGuardSpec extends SparkSpecBase {
   private val whitelist: Map[String, String] = {
     // the exact-ANN family: a small query set (querySetPred selects
     // 1% of vectors; in production, the user's query batch) broadcasts
-    // against the corpus, and the cross output is consumed by a
-    // bounded-state top-k / range aggregate — the cross is never
-    // materialized and the corpus side never shuffles. This is the
+    // against the corpus, and the cross output is consumed by the
+    // bounded-state top-k aggregate (ExactTopK) or a range filter — the
+    // cross is never materialized or sorted, and the corpus side never
+    // shuffles (pinned by the window sweep below). This is the
     // intended brute-force baseline / recall-audit oracle shape, not
     // plan rot; the scale path is the IVF/LSH entries, which must NOT
     // appear here.
@@ -38,7 +40,7 @@ class PlanGuardSpec extends SparkSpecBase {
       "q_eval_ivf_nprobe_recall", "q_eval_mrr",
       "q_eval_dim_truncation_recall", "q_eval_bq_recall",
       "q_multimodal_knn", "q_multimodal_knn_arrow"
-    ).map(_ -> "broadcast query batch x corpus into a bounded-state top-k aggregate (exact baseline / recall oracle)")
+    ).map(_ -> "broadcast query batch x corpus into a bounded-state top-k aggregate or range filter (exact baseline / recall oracle)")
     (bruteAnn :+ (
       "q_join_cross" -> "intentional tiny-dim cross: region(5) x nation(25), guarded by input size"
     )).toMap
@@ -86,6 +88,22 @@ class PlanGuardSpec extends SparkSpecBase {
     }
   }
 
+  /** The cartesian products and unbounded nested-loop joins in `plan`. */
+  private def unboundedJoins(plan: SparkPlan): Seq[String] = {
+    val carts = collectAll(plan) { case c: CartesianProductExec => c }
+      .map(_ => "CartesianProduct")
+    val badNl = collectAll(plan) { case j: BroadcastNestedLoopJoinExec => j }
+      .filterNot { j =>
+        val buildSide = j.buildSide match {
+          case org.apache.spark.sql.catalyst.optimizer.BuildLeft => j.left
+          case _ => j.right
+        }
+        bounded(buildSide)
+      }
+      .map(_ => "unbounded BroadcastNestedLoopJoin")
+    carts ++ badNl
+  }
+
   /** One plan construction per entry, shared by all sweeps — building
     * 400+ physical plans dominates this suite's runtime. Carries the
     * ANALYZED logical plan too: the window lint reads it there, where
@@ -110,20 +128,7 @@ class PlanGuardSpec extends SparkSpecBase {
 
   test("no catalog entry plans an unbounded cartesian / nested-loop join") {
     val offenders = plans.flatMap { case (name, planOrErr) =>
-      val problems = planOrErr.fold(Seq(_), { case (_, plan) =>
-          val carts = collectAll(plan) { case c: CartesianProductExec => c }
-            .map(_ => "CartesianProduct")
-          val badNl = collectAll(plan) { case j: BroadcastNestedLoopJoinExec => j }
-            .filterNot { j =>
-              val buildSide = j.buildSide match {
-                case org.apache.spark.sql.catalyst.optimizer.BuildLeft => j.left
-                case _ => j.right
-              }
-              bounded(buildSide)
-            }
-            .map(_ => "unbounded BroadcastNestedLoopJoin")
-          carts ++ badNl
-        })
+      val problems = planOrErr.fold(Seq(_), { case (_, plan) => unboundedJoins(plan) })
       if (problems.isEmpty || whitelist.contains(name)) Nil
       else Seq(s"$name: ${problems.mkString(", ")}")
     }
@@ -188,6 +193,19 @@ class PlanGuardSpec extends SparkSpecBase {
     }
     assert(offenders.isEmpty,
       s"catalog entries with HOF-heavy filter conditions:\n${offenders.mkString("\n")}")
+  }
+
+  test("no whitelisted cross is ranked by a window") {
+    // a window over the query x corpus cross sorts every scored pair
+    // only to keep k of them; the cross belongs in ExactTopK.topK.
+    // Windows over equi-joined, cell-routed frames are not crosses.
+    val offenders = plans.collect {
+      case (name, Right((_, plan))) if whitelist.contains(name) &&
+          collectAll(plan) { case w: WindowExec => w }
+            .exists(w => unboundedJoins(w).nonEmpty) => name
+    }
+    assert(offenders.isEmpty,
+      s"whitelisted entries ranking a cross with a window:\n${offenders.mkString("\n")}")
   }
 
   test("whitelist names still exist in the catalog") {

@@ -23,10 +23,8 @@ class RollbackSpec extends SparkSpecBase {
 
   private def sink = V2KeyedTableSink("k", writeParallelism = 4)
 
-  private def withCatalog[A](body: => A): A = {
-    KeyedTableRegistry.register(spark)
-    body
-  }
+  private def withCatalog[A](body: => A): A =
+    KeyedTableRegistry.withKeyedCatalog(spark)(body)
 
   test("rollback restores an LWW table to a past sequence as one new commit") {
     val t = tmpDir("graft_rb_lww_") + "/t"

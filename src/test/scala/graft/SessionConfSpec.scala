@@ -74,4 +74,16 @@ class SessionConfSpec extends SparkSpecBase {
     }
     assert(s.conf.getOption(custom).isEmpty)
   }
+
+  test("registering the keyed catalog leaves the v2-bucketing switch unset") {
+    val s = spark.newSession()
+    val bucketing = "spark.sql.sources.v2.bucketing.enabled"
+    assert(!s.conf.getAll.contains(bucketing))
+    graft.sources.KeyedTableRegistry.register(s)
+    assert(!s.conf.getAll.contains(bucketing))
+    graft.sources.KeyedTableRegistry.withKeyedCatalog(s) {
+      assert(s.conf.get(bucketing) === "true")
+    }
+    assert(!s.conf.getAll.contains(bucketing))
+  }
 }

@@ -23,10 +23,8 @@ class SqlDdlSpec extends SparkSpecBase {
 
   private def sink = V2KeyedTableSink("k", writeParallelism = 4)
 
-  private def withCatalog[A](body: => A): A = {
-    KeyedTableRegistry.register(spark)
-    body
-  }
+  private def withCatalog[A](body: => A): A =
+    KeyedTableRegistry.withKeyedCatalog(spark)(body)
 
   private def ident(t: String): String = s"graft_keyed.`$t`"
 

@@ -61,4 +61,30 @@ class TopKPairsSpec extends SparkSpecBase {
       .head().getInt(0)
     assert(got === 1)
   }
+
+  test("ranks ±0.0 as equal and NaN above every value, as the rank window does") {
+    // 0.0 and -0.0 tie (so the id decides), NaN ties NaN and beats 1.0
+    val df = Seq((1L, 0.0, 5L), (1L, -0.0, 3L), (1L, Double.NaN, 9L),
+      (1L, Double.NaN, 7L), (1L, 1.0, 1L), (1L, -0.0, 8L), (1L, 0.0, 2L),
+      (2L, 0.0, 5L), (2L, -0.0, 3L)).toDF("g", "score", "id")
+    // scores by bit pattern: `==` would fail NaN and pass 0.0 for -0.0
+    def rows(out: org.apache.spark.sql.DataFrame) =
+      out.select(col("g"), col("id"), col("score"), col("rnk")).collect()
+        .map(r => (r.getLong(0), r.getLong(1),
+          java.lang.Double.doubleToRawLongBits(r.getDouble(2)), r.getLong(3)))
+        .toSet
+    val w = Window.partitionBy(col("g"))
+      .orderBy(col("score").desc, col("id").asc)
+    val expected = rows(df.withColumn("rnk", row_number().over(w).cast("bigint"))
+      .where(col("rnk") <= 5))
+    for (parts <- Seq(1, 3)) {
+      val got = rows(df.repartition(parts)
+        .groupBy(col("g"))
+        .agg(GraftFunctions.topKPairs(col("score"), col("id"), 5).as("tk"))
+        .select(col("g"), posexplode(col("tk")).as(Seq("pos", "e")))
+        .select(col("g"), col("e.id").as("id"), col("e.score").as("score"),
+          (col("pos") + 1).cast("bigint").as("rnk")))
+      assert(got === expected, s"parts=$parts")
+    }
+  }
 }

@@ -40,10 +40,8 @@ class ZOrderFoldSpec extends SparkSpecBase {
     scans.head.inputRDD.getNumPartitions
   }
 
-  private def withCatalog[A](body: => A): A = {
-    KeyedTableRegistry.register(spark)
-    body
-  }
+  private def withCatalog[A](body: => A): A =
+    KeyedTableRegistry.withKeyedCatalog(spark)(body)
 
   private def load(t: String): Unit = {
     val sink = V2KeyedTableSink("k", writeParallelism = 4)
